@@ -18,6 +18,13 @@ persists in per-pipeline checkpoint locations, so a restarted manager
 resumes every READY pipeline from its last committed micro-batch — the
 same at-least-once replay the reference builds by hand
 (flush-then-commit, AbstractKafkaBasedConnectorTask.java:649-740).
+
+Split sink delivery contract: a micro-batch of a pipeline with paused
+partitions, a dead-letter predicate or auto-pause writes its holding-pen,
+dead-letter and transport outputs as concurrent Spark jobs over the one
+persisted batch. The epoch commits only after all of them succeed; if any
+fails, the whole batch replays, so every output is at-least-once and the
+transport may see a replayed batch twice (as any append transport can).
 """
 
 from __future__ import annotations
@@ -27,12 +34,30 @@ import os
 import shutil
 from dataclasses import dataclass, field
 
+from pyspark import InheritableThread
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from brooklin_spark.model import PipelineSpec, PipelineStatus, can_transition
 from brooklin_spark.sinks.registry import build_writer, write_batch
 from brooklin_spark.sources import build_source, commit_source
+
+
+def _append_parquet_in_thread(frame, path: str, errors: list) -> InheritableThread:
+    """Start ``frame.write.mode("append").parquet(path)`` on a thread that
+    inherits the caller's Spark local properties (job group, execution
+    context). A failure is appended to ``errors`` for the caller to raise
+    after the join, instead of dying with the thread."""
+
+    def run() -> None:
+        try:
+            frame.write.mode("append").parquet(path)
+        except Exception as e:  # re-raised by the joining thread
+            errors.append(e)
+
+    t = InheritableThread(target=run)
+    t.start()
+    return t
 
 
 @dataclass
@@ -783,23 +808,45 @@ class PipelineManager:
                     batch_df, _epoch, _spec=spec, _paused=paused, _hd=hd,
                     _pred=dl_pred, _dl=dl, _spark=self.spark, _auto=auto_conf,
                 ):
+                    # Holding-pen and dead-letter appends run as concurrent
+                    # jobs over the one persisted batch, each on an
+                    # InheritableThread so it keeps the query's job group
+                    # (query.stop() cancels it); the transport write stays
+                    # on this thread. All threads join before return and
+                    # the first failure is re-raised: the epoch stays
+                    # uncommitted and replays (at-least-once; the transport
+                    # may already hold the batch). Outputs configured into
+                    # one directory share one job, because two writers must
+                    # never commit into the same directory at once.
                     batch_df.persist()
+                    errors: list[Exception] = []
+                    threads = {}
                     try:
+                        side = {}
                         rest = batch_df
                         if _paused:
-                            rest.filter(F.col("partition").isin(_paused)).write.mode(
-                                "append"
-                            ).parquet(_hd)
+                            side[_hd] = rest.filter(F.col("partition").isin(_paused))
                             rest = rest.filter(~F.col("partition").isin(_paused))
                         if _pred:
-                            rest.filter(~F.expr(_pred)).write.mode("append").parquet(_dl)
+                            bad = rest.filter(~F.expr(_pred))
+                            side[_dl] = side[_dl].unionByName(bad) if _dl in side else bad
                             rest = rest.filter(F.expr(_pred))
+                        for path, frame in side.items():
+                            threads[path] = _append_parquet_in_thread(frame, path, errors)
                         if _auto:
+                            # the auto-pause path appends to the holding pen
+                            # too; its per-partition sends stay sequential
+                            if _hd in threads:
+                                threads[_hd].join()
                             self._deliver_with_auto_pause(_spec, rest, _auto, _hd)
                         else:
                             write_batch(rest, _spec, _spark)
                     finally:
+                        for t in threads.values():
+                            t.join()
                         batch_df.unpersist()
+                    if errors:
+                        raise errors[0]
 
                 writer = df.writeStream.foreachBatch(split).outputMode("append")
             else:

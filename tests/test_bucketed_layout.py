@@ -200,12 +200,12 @@ def test_pagerank_fused_build_is_value_identical(spark, sf_smoke):
     prev_f = dd._PR_FUSED_LI_ROWS
     prev_s = dd._PR_SPILL_LI_ROWS
     prev_kb = dd._key_upper_bound
-    # the fused bipartite path is the default everywhere since r10; force
-    # the plain distinct-pairs build as the reference side
-    dd._PR_FUSED_LI_ROWS = 10**18
-    a = fn(spark, sf_smoke).toPandas().sort_values("node", ignore_index=True)
-    dd._PR_FUSED_LI_ROWS = 0
     try:
+        # the fused bipartite path is the default everywhere; force the
+        # plain distinct-pairs build as the reference side
+        dd._PR_FUSED_LI_ROWS = 10**18
+        a = fn(spark, sf_smoke).toPandas().sort_values("node", ignore_index=True)
+        dd._PR_FUSED_LI_ROWS = 0
         b = fn(spark, sf_smoke).toPandas()  # fused, in-memory
         dd._PR_SPILL_LI_ROWS = 0
         c = fn(spark, sf_smoke).toPandas()  # fused + columnar scratch

@@ -330,6 +330,123 @@ def test_deadletter_predicate_diverts_bad_rows(spark, workdir, tmp_path):
     assert mgr.dead_letters("dlq") is None
 
 
+def _values(df) -> list[str]:
+    return sorted(bytes(r.value).decode() for r in df.select("value").collect())
+
+
+def _three_output_batch(mgr: PipelineManager, spec: PipelineSpec, src: str) -> dict:
+    """Create ``spec`` with a dead-letter predicate, pause partition 3, and
+    land one micro-batch holding rows for all three outputs of the split
+    sink. Returns the lines written, by the output they belong in."""
+    spec.metadata["system.deadletter.predicate"] = "length(value) <= 2"
+    mgr.create(spec)
+    mgr.pause_source_partitions(spec.name, [3])
+    lines = {"held": ["h1", "h2"], "dead": ["bad1", "bad2"], "delivered": ["l1", "l2"]}
+    _write_lines(f"{src}/{_name_for_partition(src, 3)}", lines["held"])
+    _write_lines(
+        f"{src}/{_name_for_partition(src, None, exclude={3})}",
+        lines["delivered"] + lines["dead"],
+    )
+    mgr.process_available(spec.name)
+    batches = [p for p in mgr.query_of(spec.name).recentProgress if p["numInputRows"]]
+    assert len(batches) == 1, batches
+    return lines
+
+
+def test_split_sink_three_outputs_in_one_batch(spark, workdir, tmp_path):
+    """One micro-batch carrying a paused partition's rows, invalid rows and
+    valid rows fans out to the holding pen, the dead-letter store and the
+    transport: each output holds exactly its own rows, so the three are
+    disjoint and add up to the input, and resuming the partition delivers
+    the held rows."""
+    src = str(tmp_path / "in")
+    os.makedirs(src)
+    mgr = PipelineManager(spark, workdir)
+    lines = _three_output_batch(mgr, _file_spec("tri", src), src)
+    held = _values(spark.read.parquet(os.path.join(workdir, "holding", "tri")))
+    dead = _values(mgr.dead_letters("tri"))
+    delivered = _values(spark.table("tri"))
+    assert (held, dead, delivered) == (lines["held"], lines["dead"], lines["delivered"])
+
+    mgr.resume_source_partitions("tri")
+    mgr.process_available("tri")
+    assert _values(spark.table("tri")) == sorted(lines["held"] + lines["delivered"])
+    assert _values(mgr.dead_letters("tri")) == lines["dead"]
+    mgr.delete("tri")
+
+
+def test_split_sink_side_outputs_sharing_a_directory(spark, workdir, tmp_path):
+    """A holding pen and dead-letter store configured into one directory
+    are appended by one job (two concurrent writers must never commit into
+    the same directory), and neither output's rows are lost."""
+    src = str(tmp_path / "in")
+    os.makedirs(src)
+    side = str(tmp_path / "side")
+    mgr = PipelineManager(spark, workdir)
+    spec = _file_spec("shared", src)
+    spec.metadata["system.holding.dir"] = side
+    spec.metadata["system.deadletter.dir"] = side
+    lines = _three_output_batch(mgr, spec, src)
+    assert _values(spark.read.parquet(side)) == sorted(lines["held"] + lines["dead"])
+    assert _values(spark.table("shared")) == lines["delivered"]
+    mgr.delete("shared")
+
+
+def test_split_sink_runs_one_job_per_output_in_the_query_group(spark, workdir, tmp_path):
+    """CI guard on the split sink's per-batch fixed cost: a micro-batch with
+    held, dead-letter and delivered rows runs exactly one Spark job per
+    output, all in the query's job group (streaming sets it to the run id).
+    A count()/isEmpty() in the hot path adds a job; a side write on a plain
+    thread escapes the group and drops one."""
+    src = str(tmp_path / "in")
+    os.makedirs(src)
+    mgr = PipelineManager(spark, workdir)
+    spec = _file_spec("jobs", src)
+    spec.transport = "parquet"
+    spec.dest_uri = f"parquet://{tmp_path / 'out'}"
+    _three_output_batch(mgr, spec, src)
+    q = mgr.query_of("jobs")
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == 3, sorted(jobs)
+    mgr.delete("jobs")
+
+
+def test_failed_side_write_fails_the_batch_and_replays(spark, workdir, tmp_path):
+    """A dead-letter write that fails on its side thread is not swallowed:
+    the query terminates with the error, the epoch stays uncommitted, and a
+    restarted manager replays it — every good row reaches the transport at
+    least once and every bad row is dead-lettered exactly once."""
+    from pyspark.errors import StreamingQueryException
+
+    src = str(tmp_path / "in")
+    good, bad = ["g1", "g2", "g3"], ["bad1", "bad2"]
+    _write_lines(src + "/a.txt", ["g1", "bad1", "g2", "bad2", "g3"])
+    blocker = tmp_path / "deadletter-blocker"
+    blocker.write_text("a regular file where the dead-letter dir should be")
+    out = tmp_path / "out"
+    spec = PipelineSpec(
+        name="dlfail", connector="file", transport="parquet",
+        source_uri=f"file://{src}", dest_uri=f"parquet://{out}",
+        metadata={
+            "system.deadletter.predicate": "length(value) <= 2",
+            "system.deadletter.dir": str(blocker),
+        },
+    )
+    mgr = PipelineManager(spark, workdir)
+    mgr.create(spec)
+    with pytest.raises(StreamingQueryException, match="deadletter-blocker"):
+        mgr.process_available("dlfail")
+    assert not mgr.query_of("dlfail").isActive
+
+    blocker.unlink()
+    mgr = PipelineManager(spark, workdir)
+    assert mgr.restore() == 1
+    mgr.process_available("dlfail")
+    assert set(_values(spark.read.parquet(str(out)))) == set(good)
+    assert _values(mgr.dead_letters("dlfail")) == bad
+    mgr.delete("dlfail")
+
+
 def test_authorizer_spi_enforced(spark, workdir, tmp_path):
     """Authorizer SPI (api/security/Authorizer.java parity): CREATE checked
     before any state exists, DELETE/UPDATE checked per principal; denial
