@@ -19,12 +19,13 @@ resumes every READY pipeline from its last committed micro-batch — the
 same at-least-once replay the reference builds by hand
 (flush-then-commit, AbstractKafkaBasedConnectorTask.java:649-740).
 
-Split sink delivery contract: a micro-batch of a pipeline with paused
-partitions, a dead-letter predicate or auto-pause writes its holding-pen,
-dead-letter and transport outputs as concurrent Spark jobs over the one
-persisted batch. The epoch commits only after all of them succeed; if any
-fails, the whole batch replays, so every output is at-least-once and the
-transport may see a replayed batch twice (as any append transport can).
+Delivery contract: every pipeline delivers through ``_deliver`` (one
+``foreachBatch`` per streaming query; once for a bounded bootstrap), so
+every transport is at-least-once under one commit protocol. An epoch
+commits only after all of its outputs (holding pen, dead letters,
+transport) succeed; otherwise it replays, and the transport may see the
+batch twice. Parquet destinations carry no ``_spark_metadata`` log, so a
+replayed epoch can add duplicate files.
 """
 
 from __future__ import annotations
@@ -39,7 +40,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from brooklin_spark.model import PipelineSpec, PipelineStatus, can_transition
-from brooklin_spark.sinks.registry import build_writer, write_batch
+from brooklin_spark.sinks.registry import prepare_destination, write_batch
 from brooklin_spark.sources import build_source, commit_source
 
 
@@ -515,6 +516,58 @@ class PipelineManager:
             self._set_auto_paused(name, auto)
         return expired
 
+    def _deliver(self, batch_df, spec: PipelineSpec) -> None:
+        """The only send path: run per micro-batch by the query's
+        foreachBatch and once by a bounded bootstrap. A plain batch goes
+        straight to the transport (one job, no persist). Otherwise paused
+        rows go to the holding pen, rows failing the predicate to the
+        dead-letter store (skip-on-error, EventProducer.java:320-336) and
+        the rest to the transport, auto-pausing on send error. The side
+        appends run as concurrent jobs over the one persisted batch, each
+        on an InheritableThread so it keeps the query's job group
+        (query.stop() cancels it); all join before return and the first
+        failure is re-raised, so the epoch replays. Outputs configured into
+        one directory share one job: two writers must never commit into
+        the same directory at once."""
+        from pyspark.sql import functions as F
+
+        paused = [int(p) for p in json.loads(spec.metadata.get("system.paused.partitions", "[]"))]
+        pred = spec.metadata.get("system.deadletter.predicate")
+        auto = self._auto_pause_conf(spec)
+        if not (paused or pred or auto):
+            write_batch(batch_df, spec, self.spark)
+            return
+        hd, dl = self._holding_dir(spec), self._deadletter_dir(spec)
+        batch_df.persist()
+        errors: list[Exception] = []
+        threads = {}
+        try:
+            side = {}
+            rest = batch_df
+            if paused:
+                side[hd] = rest.filter(F.col("partition").isin(paused))
+                rest = rest.filter(~F.col("partition").isin(paused))
+            if pred:
+                bad = rest.filter(~F.expr(pred))
+                side[dl] = side[dl].unionByName(bad) if dl in side else bad
+                rest = rest.filter(F.expr(pred))
+            for path, frame in side.items():
+                threads[path] = _append_parquet_in_thread(frame, path, errors)
+            if auto:
+                # the auto-pause path appends to the holding pen too; its
+                # per-partition sends stay sequential
+                if hd in threads:
+                    threads[hd].join()
+                self._deliver_with_auto_pause(spec, rest, auto, hd)
+            else:
+                write_batch(rest, spec, self.spark)
+        finally:
+            for t in threads.values():
+                t.join()
+            batch_df.unpersist()
+        if errors:
+            raise errors[0]
+
     def _deliver_with_auto_pause(
         self, spec: PipelineSpec, rest, conf: dict, hd: str
     ) -> None:
@@ -780,100 +833,29 @@ class PipelineManager:
         if group is None:
             group = existing.group if existing is not None else []
         df = build_source(self.spark, spec)
-        paused = [int(p) for p in json.loads(spec.metadata.get("system.paused.partitions", "[]"))]
-        # skip-on-error dead-lettering (EventProducer.java:320-336 parity):
-        # rows failing the configured validity predicate divert to a durable
-        # side store instead of poisoning the pipeline; count surfaces in
-        # diagnostics (the reference's skip counter)
-        dl_pred = spec.metadata.get("system.deadletter.predicate")
-        auto_conf = self._auto_pause_conf(spec)
+        prepare_destination(df, spec, self.spark)
         if df.isStreaming:
             # data-path counters (EventProducer meter parity): one
             # map-side aggregate riding the existing job, delivered per
             # micro-batch to the MetricsStore via observedMetrics
             from brooklin_spark.metrics import observe_counters
 
-            df = observe_counters(df)
-            ckpt = self._ckpt_dir(spec)
-            if paused or dl_pred or auto_conf:
-                # composed splitting sink: paused rows → holding pen,
-                # invalid rows → dead-letter store, auto-pause on send
-                # error, rest → transport
-                from pyspark.sql import functions as F
-
-                hd = self._holding_dir(spec)
-                dl = self._deadletter_dir(spec)
-
-                def split(
-                    batch_df, _epoch, _spec=spec, _paused=paused, _hd=hd,
-                    _pred=dl_pred, _dl=dl, _spark=self.spark, _auto=auto_conf,
-                ):
-                    # Holding-pen and dead-letter appends run as concurrent
-                    # jobs over the one persisted batch, each on an
-                    # InheritableThread so it keeps the query's job group
-                    # (query.stop() cancels it); the transport write stays
-                    # on this thread. All threads join before return and
-                    # the first failure is re-raised: the epoch stays
-                    # uncommitted and replays (at-least-once; the transport
-                    # may already hold the batch). Outputs configured into
-                    # one directory share one job, because two writers must
-                    # never commit into the same directory at once.
-                    batch_df.persist()
-                    errors: list[Exception] = []
-                    threads = {}
-                    try:
-                        side = {}
-                        rest = batch_df
-                        if _paused:
-                            side[_hd] = rest.filter(F.col("partition").isin(_paused))
-                            rest = rest.filter(~F.col("partition").isin(_paused))
-                        if _pred:
-                            bad = rest.filter(~F.expr(_pred))
-                            side[_dl] = side[_dl].unionByName(bad) if _dl in side else bad
-                            rest = rest.filter(F.expr(_pred))
-                        for path, frame in side.items():
-                            threads[path] = _append_parquet_in_thread(frame, path, errors)
-                        if _auto:
-                            # the auto-pause path appends to the holding pen
-                            # too; its per-partition sends stay sequential
-                            if _hd in threads:
-                                threads[_hd].join()
-                            self._deliver_with_auto_pause(_spec, rest, _auto, _hd)
-                        else:
-                            write_batch(rest, _spec, _spark)
-                    finally:
-                        for t in threads.values():
-                            t.join()
-                        batch_df.unpersist()
-                    if errors:
-                        raise errors[0]
-
-                writer = df.writeStream.foreachBatch(split).outputMode("append")
-            else:
-                writer = build_writer(df, spec)
             query = (
-                writer.option("checkpointLocation", ckpt)
+                observe_counters(df)
+                .writeStream.foreachBatch(lambda batch_df, _epoch: self._deliver(batch_df, spec))
+                .option("checkpointLocation", self._ckpt_dir(spec))
                 .queryName(spec.name)
                 .start()
             )
-            self._running[spec.name] = _Running(spec=spec, query=query, group=list(group))
         else:
-            # bounded bootstrap: batch write through the same transport
-            from pyspark.sql import functions as F
-
-            if paused:
-                df.filter(F.col("partition").isin(paused)).write.mode("append").parquet(
-                    self._holding_dir(spec)
-                )
-                df = df.filter(~F.col("partition").isin(paused))
-            if dl_pred:
-                df.filter(~F.expr(dl_pred)).write.mode("append").parquet(
-                    self._deadletter_dir(spec)
-                )
-                df = df.filter(F.expr(dl_pred))
-            write_batch(df, spec)
-            commit_source(spec)  # advance the connector's position post-send
-            self._running[spec.name] = _Running(spec=spec, query=None, group=list(group))
+            # bounded bootstrap: the same delivery, then advance the
+            # connector's position post-send; auto-pause may have recorded
+            # paused partitions on disk, which the persist below must keep
+            self._deliver(df, spec)
+            commit_source(spec)
+            spec.metadata = self.get(spec.name).metadata
+            query = None
+        self._running[spec.name] = _Running(spec=spec, query=query, group=list(group))
         if not already_ready:
             self._transition(spec, PipelineStatus.READY)
         self._persist(spec)

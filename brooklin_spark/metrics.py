@@ -41,13 +41,12 @@ class MetricsStore(StreamingQueryListener):
         self._lock = threading.Lock()
         self._progress: dict[str, deque] = {}
         self._totals: dict[str, dict[str, float]] = {}
-        self._status: dict[str, str] = {}
 
     # ---------------------------------------------------- listener callbacks
+    # start, idle and termination carry nothing the snapshots keep; the
+    # listener interface requires the callbacks
     def onQueryStarted(self, event) -> None:
-        name = event.name or event.id
-        with self._lock:
-            self._status[str(name)] = "started"
+        pass
 
     def onQueryProgress(self, event) -> None:
         p = event.progress
@@ -71,24 +70,14 @@ class MetricsStore(StreamingQueryListener):
             for row in batch["observed"].values():
                 if "n_rows" in row and row["n_rows"] is not None:
                     t["observed_rows"] += row["n_rows"]
-            self._status[name] = "running"
 
     def onQueryIdle(self, event) -> None:
         pass
 
     def onQueryTerminated(self, event) -> None:
-        with self._lock:
-            # terminated events carry id, not name — mark every started
-            # query whose id matches (name keys hold progress history)
-            self._status[str(event.id)] = (
-                "failed" if event.exception else "terminated"
-            )
+        pass
 
     # ------------------------------------------------------------ snapshots
-    def query_names(self) -> list[str]:
-        with self._lock:
-            return sorted(self._progress)
-
     def totals(self, name: str) -> dict[str, float]:
         with self._lock:
             return dict(self._totals.get(name, {}))

@@ -1,31 +1,20 @@
-"""Sink registry: transport name → writer builder.
+"""Transport → batch writer, run once per micro-batch.
 
-Each builder takes the envelope DataFrame (streaming) and the spec and
-returns a started-ready DataStreamWriter. Checkpoint location and trigger
-config are applied by the PipelineManager (one place, per pipeline).
+``write_batch`` is the only per-transport code (the TransportProvider.send
+analog, TransportProvider.java:15-65). Every pipeline reaches it through
+``PipelineManager._deliver``: streaming pipelines from one ``foreachBatch``
+per query, bounded bootstraps once. ``WRITERS`` is keyed by exactly the
+transports ``model.KNOWN_TRANSPORTS`` accepts.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
-from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from brooklin_spark.model import PipelineSpec
-
-SinkBuilder = Callable[[DataFrame, PipelineSpec], DataStreamWriter]
-
-SINKS: dict[str, SinkBuilder] = {}
-
-
-def sink(name: str) -> Callable[[SinkBuilder], SinkBuilder]:
-    def deco(fn: SinkBuilder) -> SinkBuilder:
-        SINKS[name] = fn
-        return fn
-
-    return deco
 
 
 def _serde_applied(df: DataFrame, spec: PipelineSpec) -> DataFrame:
@@ -41,54 +30,59 @@ def _serde_applied(df: DataFrame, spec: PipelineSpec) -> DataFrame:
     return apply_serdes(df, spec)
 
 
-def build_writer(df: DataFrame, spec: PipelineSpec) -> DataStreamWriter:
-    """Streaming writer for the spec's transport."""
-    if spec.transport not in SINKS:
-        raise ValueError(f"no sink builder for transport {spec.transport!r}")
-    return SINKS[spec.transport](_serde_applied(df, spec), spec)
-
-
 def write_batch(df: DataFrame, spec: PipelineSpec, spark=None) -> None:
-    """Bounded-bootstrap path: write a batch envelope frame through the
-    spec's transport (the same destinations, batch API). ``spark`` pins the
-    session used for memory-table view registration when df comes from a
-    foreachBatch clone."""
-    df = _serde_applied(df, spec)
-    t = spec.transport
-    if t == "memory":
-        _memory_append(spec.metadata.get("memory.table", spec.name), df, spark)
-    elif t in ("parquet", "file"):
-        path = (spec.dest_uri or "").removeprefix("parquet://").removeprefix("file://")
-        if not path:
-            raise ValueError(f"parquet sink needs dest_uri, got {spec.dest_uri!r}")
-        df.write.mode("append").partitionBy("topic").parquet(path)
-    elif t == "console":
-        df.show(20, truncate=False)
-    elif t == "noop":
-        df.write.format("noop").mode("overwrite").save()
-    elif t == "materialize":
-        from brooklin_spark.sinks.materialize import _state_root, merge_batch
+    """Write a batch envelope frame through the spec's transport. ``spark``
+    pins the session used for memory-table view registration when df comes
+    from a foreachBatch clone."""
+    WRITERS[spec.transport](_serde_applied(df, spec), spec, spark)
 
-        merge_batch(df, _state_root(spec), spark)
-    elif t == "directory":
-        _directory_mirror(df, spec)
-    elif t == "broken":
-        _broken_send(df, spec, spark)
-    elif t == "kafka":
-        dest = (spec.dest_uri or "").removeprefix("kafka://")
-        servers, _, topic = dest.partition("/")
-        kafka_out_projection(df, topic or None).write.format("kafka").option(
-            "kafka.bootstrap.servers", servers
-        ).option("includeHeaders", "true").save()
-    else:
-        raise ValueError(f"transport {t!r} has no batch path")
+
+def prepare_destination(df: DataFrame, spec: PipelineSpec, spark: SparkSession) -> None:
+    """Run once when a pipeline starts, before its first batch: a parquet or
+    materialize destination must be named (so a bad spec fails at create),
+    and a memory or broken table is queryable, empty, as soon as the
+    pipeline is READY."""
+    if spec.transport in ("parquet", "file"):
+        _parquet_path(spec)
+    elif spec.transport == "materialize":
+        from brooklin_spark.sinks.materialize import _state_root
+
+        _state_root(spec)
+    elif spec.transport in ("memory", "broken"):
+        name = _memory_table(spec)
+        if name not in _MEMORY_ROWS:
+            schema = _serde_applied(df, spec).schema
+            _MEMORY_ROWS[name] = []
+            _MEMORY_SCHEMA[name] = schema
+            spark.createDataFrame([], schema).createOrReplaceTempView(name)
+
+
+def _parquet_path(spec: PipelineSpec) -> str:
+    path = (spec.dest_uri or "").removeprefix("parquet://").removeprefix("file://")
+    if not path:
+        raise ValueError(f"parquet sink needs dest_uri, got {spec.dest_uri!r}")
+    return path
+
+
+def _parquet_append(df: DataFrame, spec: PipelineSpec, spark=None) -> None:
+    """Directory/file mirroring (DirectoryTransportProvider analog) as
+    parquet partitioned by topic, so each pipeline's output prunes by
+    destination; append-only, at-least-once."""
+    df.write.mode("append").partitionBy("topic").parquet(_parquet_path(spec))
+
+
+def _materialize(df: DataFrame, spec: PipelineSpec, spark=None) -> None:
+    """CDC MERGE: apply op-codes to a keyed state table (see
+    sinks/materialize.py)."""
+    from brooklin_spark.sinks.materialize import _state_root, merge_batch
+
+    merge_batch(df, _state_root(spec), spark)
 
 
 # ---------------------------------------------------------------------------
 # In-memory accumulating sink (ListBackedTransportProvider analog,
-# datastream-testcommon/.../ListBackedTransportProvider.java). Implemented
-# with foreachBatch instead of format("memory") because foreachBatch sinks
-# support checkpoint recovery — pause/resume and crash-restart keep already-
+# datastream-testcommon/.../ListBackedTransportProvider.java). Rows are
+# appended per micro-batch, so pause/resume and crash-restart keep already-
 # delivered records and replay only uncommitted batches (at-least-once).
 # Driver-side accumulation: test/diagnostics use only, like the reference's.
 # ---------------------------------------------------------------------------
@@ -97,10 +91,14 @@ _MEMORY_ROWS: dict[str, list] = {}
 _MEMORY_SCHEMA: dict[str, object] = {}
 
 
+def _memory_table(spec: PipelineSpec) -> str:
+    return spec.metadata.get("memory.table", spec.name)
+
+
 def _memory_append(name: str, batch_df: DataFrame, spark=None) -> None:
     # NOTE: foreachBatch hands us a frame bound to a CLONED session; temp
     # views registered there are invisible to the user's session. Register
-    # on the main session captured at sink-build time.
+    # on the manager's session when one is given.
     rows = batch_df.collect()
     _MEMORY_ROWS.setdefault(name, []).extend(rows)
     _MEMORY_SCHEMA[name] = batch_df.schema
@@ -114,67 +112,6 @@ def drop_memory_table(spark, name: str) -> None:
     spark.catalog.dropTempView(name)
 
 
-@sink("memory")
-def memory_sink(df: DataFrame, spec: PipelineSpec) -> DataStreamWriter:
-    name = spec.metadata.get("memory.table", spec.name)
-    # register the view up front (empty until the first batch) so consumers
-    # can query the destination as soon as the pipeline is READY
-    spark = df.sparkSession
-    if name not in _MEMORY_ROWS:
-        _MEMORY_ROWS[name] = []
-        _MEMORY_SCHEMA[name] = df.schema
-        spark.createDataFrame([], df.schema).createOrReplaceTempView(name)
-    return df.writeStream.foreachBatch(
-        lambda batch_df, _epoch: _memory_append(name, batch_df, spark)
-    ).outputMode("append")
-
-
-@sink("parquet")
-def parquet_sink(df: DataFrame, spec: PipelineSpec) -> DataStreamWriter:
-    """Directory/file mirroring sink (DirectoryTransportProvider analog) as
-    partitioned parquet — partitioned by topic so each pipeline's output
-    prunes by destination, append-only at-least-once."""
-    path = (spec.dest_uri or "").removeprefix("parquet://").removeprefix("file://")
-    if not path:
-        raise ValueError(f"parquet sink needs dest_uri, got {spec.dest_uri!r}")
-    return (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .partitionBy("topic")
-        .outputMode("append")
-    )
-
-
-@sink("file")
-def file_sink(df: DataFrame, spec: PipelineSpec) -> DataStreamWriter:
-    return parquet_sink(df, spec)
-
-
-@sink("console")
-def console_sink(df: DataFrame, spec: PipelineSpec) -> DataStreamWriter:
-    return df.writeStream.format("console").outputMode("append")
-
-
-@sink("noop")
-def noop_sink(df: DataFrame, spec: PipelineSpec) -> DataStreamWriter:
-    """Discard sink (BrokenConnector/Dummy test analogs): runs the plan,
-    writes nothing — used for throughput measurement."""
-    return df.writeStream.format("noop").outputMode("append")
-
-
-@sink("materialize")
-def materialize_sink(df: DataFrame, spec: PipelineSpec) -> DataStreamWriter:
-    """CDC MERGE sink: apply op-codes to a keyed state table (see
-    sinks/materialize.py)."""
-    from brooklin_spark.sinks.materialize import _state_root, merge_batch
-
-    root = _state_root(spec)
-    spark = df.sparkSession
-    return df.writeStream.foreachBatch(
-        lambda batch_df, _epoch: merge_batch(batch_df, root, spark)
-    ).outputMode("append")
-
-
 # ---------------------------------------------------------------------------
 # Directory mirroring transport (DirectoryTransportProvider.java:48-98):
 # reflect ENTRY_CREATED / ENTRY_MODIFIED / ENTRY_DELETED change events into
@@ -185,7 +122,7 @@ def materialize_sink(df: DataFrame, spec: PipelineSpec) -> DataStreamWriter:
 # ---------------------------------------------------------------------------
 
 
-def _directory_mirror(df: DataFrame, spec: PipelineSpec) -> None:
+def _directory_mirror(df: DataFrame, spec: PipelineSpec, spark=None) -> None:
     import os
 
     dest = (spec.dest_uri or "").removeprefix("dir://").removeprefix("file://")
@@ -205,13 +142,6 @@ def _directory_mirror(df: DataFrame, spec: PipelineSpec) -> None:
         else:  # INSERT = copy; UPDATE = delete+copy (same final state)
             with open(target, "wb") as f:
                 f.write(bytes(r.value or b""))
-
-
-@sink("directory")
-def directory_sink(df: DataFrame, spec: PipelineSpec) -> DataStreamWriter:
-    return df.writeStream.foreachBatch(
-        lambda batch_df, _epoch: _directory_mirror(batch_df, spec)
-    ).outputMode("append")
 
 
 # ---------------------------------------------------------------------------
@@ -234,20 +164,7 @@ def _broken_send(df: DataFrame, spec: PipelineSpec, spark=None) -> None:
             raise RuntimeError(
                 f"broken transport: simulated send error ({bad} rows)"
             )
-    _memory_append(spec.metadata.get("memory.table", spec.name), df, spark)
-
-
-@sink("broken")
-def broken_sink(df: DataFrame, spec: PipelineSpec) -> DataStreamWriter:
-    spark = df.sparkSession
-    name = spec.metadata.get("memory.table", spec.name)
-    if name not in _MEMORY_ROWS:  # queryable-before-first-delivery, like memory
-        _MEMORY_ROWS[name] = []
-        _MEMORY_SCHEMA[name] = df.schema
-        spark.createDataFrame([], df.schema).createOrReplaceTempView(name)
-    return df.writeStream.foreachBatch(
-        lambda batch_df, _epoch: _broken_send(batch_df, spec, spark)
-    ).outputMode("append")
+    _memory_append(_memory_table(spec), df, spark)
 
 
 def kafka_out_projection(df: DataFrame, dest_topic: str | None) -> DataFrame:
@@ -271,8 +188,7 @@ def kafka_out_projection(df: DataFrame, dest_topic: str | None) -> DataFrame:
     )
 
 
-@sink("kafka")
-def kafka_sink(df: DataFrame, spec: PipelineSpec) -> DataStreamWriter:
+def _kafka_send(df: DataFrame, spec: PipelineSpec, spark=None) -> None:
     """Kafka transport (KafkaTransportProvider.java:46,106-146 analog).
 
     Routing parity: explicit `partition` column if present (explicit
@@ -283,12 +199,23 @@ def kafka_sink(df: DataFrame, spec: PipelineSpec) -> DataStreamWriter:
     forward as Kafka record headers. Requires spark-sql-kafka on the
     classpath plus `kafka.includeHeaders` on the writer.
     """
-    dest = (spec.dest_uri or "").removeprefix("kafka://")
-    servers, _, topic = dest.partition("/")
-    out = kafka_out_projection(df, topic or None)
-    return (
-        out.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", servers)
-        .option("includeHeaders", "true")
-        .outputMode("append")
-    )
+    servers, _, topic = (spec.dest_uri or "").removeprefix("kafka://").partition("/")
+    kafka_out_projection(df, topic or None).write.format("kafka").option(
+        "kafka.bootstrap.servers", servers
+    ).option("includeHeaders", "true").save()
+
+
+#: transport -> writer(df, spec, spark); ``spark`` may be None
+WRITERS: dict[str, Callable[[DataFrame, PipelineSpec, SparkSession | None], None]] = {
+    "memory": lambda df, spec, spark: _memory_append(_memory_table(spec), df, spark),
+    "parquet": _parquet_append,
+    "file": _parquet_append,
+    "console": lambda df, spec, spark: df.show(20, truncate=False),
+    # discard (BrokenConnector/Dummy test analogs): runs the plan, writes
+    # nothing — used for throughput measurement
+    "noop": lambda df, spec, spark: df.write.format("noop").mode("overwrite").save(),
+    "materialize": _materialize,
+    "directory": _directory_mirror,
+    "broken": _broken_send,
+    "kafka": _kafka_send,
+}

@@ -71,7 +71,7 @@ def run_to_completion(
     Bounded-testdata harness ONLY (VERDICT r1 'what's wrong' #4): it
     collects every drained row to the driver, which is the point for the
     correctness gate but unbounded on a live stream — production paths go
-    through manager.py sinks (kafka/parquet/foreachBatch writers), never
+    through PipelineManager._deliver (one foreachBatch per query), never
     this helper. A hard row cap guards against accidental live use.
     """
     spark = result.sparkSession

@@ -294,6 +294,43 @@ def test_subthreshold_send_failure_pen_flushes_on_poll(spark, tmp_path):
     mgr.delete("sth")
 
 
+def test_bounded_bootstrap_auto_pauses_a_failing_partition(spark, tmp_path):
+    """The bounded bootstrap delivers like a streaming batch: a partition
+    whose send fails is held and auto-paused instead of failing create, the
+    auto-pause state is persisted, and the held rows re-deliver once the
+    pause expires."""
+    src = str(tmp_path / "table")
+    spark.range(5).coalesce(1).write.parquet(src)  # one file: partition 0
+    mgr = PipelineManager(spark, str(tmp_path / "mgr"))
+    sinks.BROKEN_FAIL_PARTITIONS.add(0)
+    try:
+        mgr.create(
+            PipelineSpec(
+                name="bootap",
+                connector="parquet",
+                transport="broken",
+                source_uri=f"parquet://{src}",
+                metadata={
+                    "memory.table": "bootap",
+                    "system.auto.pause.on.error": "true",
+                    "system.auto.pause.duration.ms": "500",
+                },
+            )
+        )
+        assert list(mgr.auto_paused_partitions("bootap")) == [0]
+        assert _delivered(spark, "bootap") == 0
+    finally:
+        sinks.BROKEN_FAIL_PARTITIONS.discard(0)
+    deadline = time.time() + 15
+    resumed: list = []
+    while time.time() < deadline and not resumed:
+        time.sleep(0.3)
+        resumed = mgr.poll_auto_resume("bootap")
+    assert resumed == [0]
+    assert _delivered(spark, "bootap") == 5
+    mgr.delete("bootap")
+
+
 def test_dirwatch_failed_send_replays_same_diff(spark, tmp_path, monkeypatch):
     """A failed send must NOT advance the dirwatch snapshot (ADVICE r2 #2):
     the committed state file only moves after write_batch succeeds, so the

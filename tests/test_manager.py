@@ -188,6 +188,20 @@ def test_duplicate_name_rejected(spark, workdir, tmp_path):
     mgr.delete("dup")
 
 
+@pytest.mark.parametrize("transport", ["parquet", "materialize"])
+def test_streaming_create_without_destination_rejected(spark, workdir, tmp_path, transport):
+    """A path transport with no dest_uri is rejected at create, before any
+    batch runs, and leaves nothing in the catalog."""
+    src = str(tmp_path / "in")
+    _write_lines(src + "/a.txt", ["v"])
+    mgr = PipelineManager(spark, workdir)
+    spec = _file_spec("nodest", src)
+    spec.transport = transport
+    with pytest.raises(ValueError, match="needs dest_uri"):
+        mgr.create(spec)
+    assert mgr.list() == [] and mgr.query_of("nodest") is None
+
+
 def test_illegal_transition_rejected(spark, workdir, tmp_path):
     src = str(tmp_path / "in")
     _write_lines(src + "/a.txt", ["v"])
@@ -392,23 +406,77 @@ def test_split_sink_side_outputs_sharing_a_directory(spark, workdir, tmp_path):
     mgr.delete("shared")
 
 
+def _parquet_spec(name: str, src: str, out: str, **metadata: str) -> PipelineSpec:
+    return PipelineSpec(
+        name=name, connector="file", transport="parquet",
+        source_uri=f"file://{src}", dest_uri=f"parquet://{out}", metadata=metadata,
+    )
+
+
 def test_split_sink_runs_one_job_per_output_in_the_query_group(spark, workdir, tmp_path):
-    """CI guard on the split sink's per-batch fixed cost: a micro-batch with
-    held, dead-letter and delivered rows runs exactly one Spark job per
-    output, all in the query's job group (streaming sets it to the run id).
-    A count()/isEmpty() in the hot path adds a job; a side write on a plain
-    thread escapes the group and drops one."""
+    """CI guard on the delivery's per-batch fixed cost: a micro-batch runs
+    exactly one Spark job per output, all in the query's job group
+    (streaming sets it to the run id). A plain batch has one output, so a
+    count() or isEmpty() on the single-output path shows as a second job;
+    with held, dead-letter and delivered rows there are three, and a side
+    write on a plain thread escapes the group and drops one."""
     src = str(tmp_path / "in")
     os.makedirs(src)
     mgr = PipelineManager(spark, workdir)
-    spec = _file_spec("jobs", src)
-    spec.transport = "parquet"
-    spec.dest_uri = f"parquet://{tmp_path / 'out'}"
+
+    def jobs(name: str) -> list[int]:
+        run_id = str(mgr.query_of(name).runId)
+        return sorted(spark.sparkContext.statusTracker().getJobIdsForGroup(run_id))
+
+    plain_src = str(tmp_path / "plain")
+    _write_lines(plain_src + "/a.txt", ["p1", "p2"])
+    mgr.create(_parquet_spec("plain", plain_src, str(tmp_path / "plain_out")))
+    mgr.process_available("plain")
+    assert len(jobs("plain")) == 1, jobs("plain")
+    mgr.delete("plain")
+
+    spec = _parquet_spec("jobs", src, str(tmp_path / "out"))
     _three_output_batch(mgr, spec, src)
-    q = mgr.query_of("jobs")
-    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
-    assert len(jobs) == 3, sorted(jobs)
+    assert len(jobs("jobs")) == 3, jobs("jobs")
     mgr.delete("jobs")
+
+
+def test_parquet_destination_readable_after_a_partition_pause(spark, workdir, tmp_path):
+    """Pausing a partition of a running parquet pipeline must not change
+    how its destination is committed: every row delivered before and after
+    the pause reads back from the destination directory."""
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    before, after = [f"b{i}" for i in range(10)], [f"a{i}" for i in range(10)]
+    _write_lines(f"{src}/{_name_for_partition(src, 5)}", before)
+    mgr = PipelineManager(spark, workdir)
+    mgr.create(_parquet_spec("pqpause", src, out))
+    mgr.process_available("pqpause")
+    mgr.pause_source_partitions("pqpause", [7])  # no file lands on it
+    _write_lines(f"{src}/{_name_for_partition(src, 9)}", after)
+    mgr.process_available("pqpause")
+    assert _values(spark.read.parquet(out)) == sorted(before + after)
+    mgr.delete("pqpause")
+
+
+def test_parquet_destination_readable_after_resuming_a_created_paused_partition(
+    spark, workdir, tmp_path
+):
+    """A parquet pipeline created with a paused partition and then resumed
+    keeps a readable destination that holds the live rows, the flushed held
+    rows and the rows delivered after the resume."""
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    held, live, new = ["h1", "h2"], ["l1", "l2"], ["n1", "n2"]
+    _write_lines(f"{src}/{_name_for_partition(src, 3)}", held)
+    _write_lines(f"{src}/{_name_for_partition(src, None, exclude={3})}", live)
+    mgr = PipelineManager(spark, workdir)
+    mgr.create(_parquet_spec("pqresume", src, out, **{"system.paused.partitions": "[3]"}))
+    mgr.process_available("pqresume")
+    assert _values(spark.read.parquet(out)) == live
+    mgr.resume_source_partitions("pqresume")
+    _write_lines(src + "/new.txt", new)
+    mgr.process_available("pqresume")
+    assert _values(spark.read.parquet(out)) == sorted(held + live + new)
+    mgr.delete("pqresume")
 
 
 def test_failed_side_write_fails_the_batch_and_replays(spark, workdir, tmp_path):

@@ -77,7 +77,7 @@ def test_summary_reduces_across_queries(spark, store):
         )
     try:
         assert _wait(
-            lambda: len(store.query_names()) >= 2
+            lambda: store.summary()["queries"] >= 2
             and store.summary()["input_rows"] > 0
         )
     finally:

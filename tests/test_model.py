@@ -7,6 +7,7 @@ import pytest
 
 from brooklin_spark.model import (
     ENVELOPE_SCHEMA,
+    KNOWN_TRANSPORTS,
     PipelineSpec,
     PipelineStatus,
     can_transition,
@@ -157,3 +158,12 @@ def test_advise_shuffle_partitions_full_waves():
     assert advise_shuffle_partitions(0, 32) == 32
     n = advise_shuffle_partitions(int(100e9), 32)
     assert n % 32 == 0 and n >= 100e9 / (128 * 1024 * 1024)
+
+
+def test_every_known_transport_has_a_batch_writer():
+    """``write_batch`` is the only per-transport code, so a transport the
+    spec validation accepts but no writer handles would fail only at the
+    first micro-batch instead of at create."""
+    from brooklin_spark.sinks.registry import WRITERS
+
+    assert set(WRITERS) == KNOWN_TRANSPORTS
