@@ -579,11 +579,15 @@ def test_q15_q11_scalar_agg_not_global_window(spark, sf_correct):
 
 
 def test_pagerank_rounds_do_not_reshuffle_edges(spark, sf_correct):
-    """The checkpointed edge table is hash-partitioned on src
-    (checkpoint_partitioned), so with broadcast disabled — the at-scale
-    shape — NO round may re-exchange it; only the inflow aggregates and
-    the one-time build remain. Pins the AQE/UnknownPartitioning fix."""
+    """The grouped adjacency is checkpointed hash-partitioned on ck
+    (checkpoint_partitioned), so with automatic broadcast disabled — the
+    at-scale shape — NO round may re-exchange it on ck: the only
+    round-time exchanges are the one supplier-keyed inflow aggregate per
+    round. Pins the AQE/UnknownPartitioning fix (a plain localCheckpoint
+    loses the partitioning and adds ck exchanges)."""
     import re
+
+    from brooklin_spark.queries.dedup import _PR_ITERS
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -592,8 +596,10 @@ def test_pagerank_rounds_do_not_reshuffle_edges(spark, sf_correct):
         plan = df._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    edge_exchanges = re.findall(r"Exchange hashpartitioning\(src#\d+", plan)
-    assert not edge_exchanges, edge_exchanges
+    ck_exchanges = re.findall(r"Exchange hashpartitioning\(ck#\d+", plan)
+    assert not ck_exchanges, ck_exchanges
+    sk_exchanges = re.findall(r"Exchange hashpartitioning\(sk#\d+", plan)
+    assert len(sk_exchanges) == _PR_ITERS, plan
 
 
 def test_runtime_bloom_filter_reaches_lineitem_scan(spark, sf_correct):
