@@ -1,14 +1,59 @@
-"""Distributed graph kernels over edge-pair DataFrames.
+"""Distributed graph builders and kernels over edge-pair DataFrames.
 
-The iterative algorithms (PageRank, label propagation, n-hop BFS) live
-inline in their queries — their loop structure is the query. This module
-holds the one-shot kernels that are reusable as-is.
+The builders turn fact rows into graph shapes: `baskets` groups each
+order's parts, `pairs_within` generates every in-array pair (the
+co-purchase candidate generator — combinations inside the row pipeline
+after ONE key-grouped exchange, never a table self-join), `doubled`
+turns undirected pairs into a both-direction edge table and
+`sorted_adjacency` groups that table into per-node neighbor arrays. Each
+returns a lazy frame; the caller decides what to materialize.
+
+The iterative algorithms (PageRank, label propagation, n-hop BFS, the
+kcore peel) live in their queries — their loop structure is the query.
+`triangle_census` is the one-shot kernel reusable as-is.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def baskets(li: DataFrame) -> DataFrame:
+    """(l_orderkey, parts): each order's sorted DISTINCT part keys, from ONE
+    orderkey exchange. No (orderkey, partkey) DISTINCT before the groupBy
+    — array_distinct de-dups inside the aggregate, so a separate one
+    would be a second fact-scale exchange. Because parts are distinct
+    per order, a per-pair count(*) over `pairs_within` IS the
+    distinct-order support count."""
+    return li.groupBy("l_orderkey").agg(
+        F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts")
+    )
+
+
+def pairs_within(df: DataFrame, arr: str, a: str, b: str, *carry: str) -> DataFrame:
+    """Every pair (a, b) with a < b inside the sorted distinct array column
+    `arr` of each row (posexplode x slice), plus the `carry` columns.
+    C(len, 2) rows per input row, generated locally: the array's own
+    length bounds the blow-up, and nothing is shuffled or joined."""
+    return df.select(*carry, F.posexplode(arr).alias("i", a), F.col(arr)).select(
+        *carry, a, F.explode(F.expr(f"slice({arr}, i + 2, size({arr}))")).alias(b)
+    )
+
+
+def doubled(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """(src, dst) in both directions from undirected (a, b) pairs."""
+    return pairs.select(F.col(a).alias("src"), F.col(b).alias("dst")).unionAll(
+        pairs.select(F.col(b).alias("src"), F.col(a).alias("dst"))
+    )
+
+
+def sorted_adjacency(edges: DataFrame) -> DataFrame:
+    """(src, nb): each node's sorted distinct neighbors, one src exchange —
+    the wedge center for `pairs_within`, with deg = size(nb)."""
+    return edges.groupBy("src").agg(
+        F.array_sort(F.array_distinct(F.collect_list("dst"))).alias("nb")
+    )
 
 
 def triangle_census(pairs: DataFrame) -> DataFrame:

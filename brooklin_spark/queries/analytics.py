@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from brooklin_spark.io import table
+from brooklin_spark.operators import graph as GR
 from brooklin_spark.operators.distrank import (
     global_ntile,
     global_row_number,
@@ -376,11 +377,7 @@ def basket_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint the basket table once — one orderkey exchange total,
     # and n_orders falls out as a count of basket rows instead of a
     # second lineitem scan
-    baskets = (
-        li.groupBy("l_orderkey")
-        .agg(F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts"))
-        .localCheckpoint(eager=False)
-    )
+    baskets = GR.baskets(li).localCheckpoint(eager=False)
     n_orders = baskets.agg(
         F.count(F.lit(1)).alias("n_orders")
     )  # 1-row side, broadcast below (no separate driver action)
@@ -390,11 +387,7 @@ def basket_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("f"))
     )
     pairs = (
-        baskets.select(F.posexplode("parts").alias("i", "part_a"), F.col("parts"))
-        .select(
-            "part_a",
-            F.explode(F.expr("slice(parts, i + 2, size(parts))")).alias("part_b"),
-        )
+        GR.pairs_within(baskets, "parts", "part_a", "part_b")
         .groupBy("part_a", "part_b")
         .agg(F.count("*").alias("together"))
         .filter(F.col("together") >= 3)
@@ -1384,12 +1377,9 @@ def events_value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def basket_apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts")
-    )
     # (i, pa) x (j > i, pb) x (rest, pc) — combinations, not joins
     triples = (
-        baskets.select(F.posexplode("parts").alias("i", "pa"), "parts")
+        GR.baskets(li).select(F.posexplode("parts").alias("i", "pa"), "parts")
         .select(
             "pa",
             F.posexplode(F.expr("slice(parts, i + 2, size(parts))")).alias(

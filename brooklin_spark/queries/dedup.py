@@ -9,12 +9,13 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from brooklin_spark.checkpoint import checkpoint_partitioned, spill_bucketed
 from brooklin_spark.io import table
 from brooklin_spark.operators import dedup as D
+from brooklin_spark.operators import graph as GR
 from brooklin_spark.queries import _sqlgen as G
 from brooklin_spark.registry import query
 
@@ -537,12 +538,13 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Triangle count on the near-dup graph: per connected component, how many
-# edge triangles its pairs form — the cluster-density diagnostic (a clique
-# of exact copies is triangle-dense; a chain of drifting revisions has
-# none). Edges ordered a<b<c so each triangle counts once; two self-joins
-# on the (small) pair set — the pair DETECTION stays banded, only the
-# detected edges enter the cubic-shaped join.
+# Triangle count on the near-dup graph: how many edge triangles the
+# detected pairs form — the cluster-density diagnostic (a clique of exact
+# copies is triangle-dense; a chain of drifting revisions has none). The
+# pair DETECTION stays banded; the detected edges go through the same
+# degree-oriented census as graph_triangle_census (GR.triangle_census:
+# each triangle counted once at its smallest corner, all inside one lazy
+# plan).
 # ---------------------------------------------------------------------------
 
 
@@ -574,26 +576,12 @@ def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id", "n", F.xxhash64("shingle").alias("shingle"))
         .localCheckpoint()
     )
-    e = (
-        D.jaccard_pairs_selfjoin(sh, threshold=0.7)
-        .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .localCheckpoint()  # tiny edge set feeds three join sides
+    # doc_a < doc_b: the near-dup pairs are already the census's
+    # undirected (pa < pb) input
+    pairs = D.jaccard_pairs_selfjoin(sh, threshold=0.7).select(
+        F.col("doc_a").alias("pa"), F.col("doc_b").alias("pb")
     )
-    e1 = e.alias("e1")
-    e2 = e.alias("e2")
-    e3 = e.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e2.a") == F.col("e1.b"))
-        .join(
-            e3,
-            (F.col("e3.a") == F.col("e1.a")) & (F.col("e3.b") == F.col("e2.b")),
-        )
-        .count()
-    )
-    n_edges = e.count()
-    return spark.createDataFrame(
-        [(tri, n_edges)], "n_triangles bigint, n_edges bigint"
-    )
+    return GR.triangle_census(pairs).select("n_triangles", "n_edges")
 
 
 # ---------------------------------------------------------------------------
@@ -806,42 +794,50 @@ def _key_upper_bound(sf_dir: str, tbl: str, col: str) -> int | None:
         return None
 
 
-def _graph_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct bipartite customer-supplier pairs with INTEGER node ids
-    (custkey*2 / suppkey*2+1): the graph kernels shuffle longs, not
-    'c123' strings — half the shuffle bytes and integer hashing on the
-    1M+-edge table at sf0.1+. The display string is formatted only on
-    the final per-node result rows (_graph_node_str). The node-id
-    encoding lives HERE and in _graph_node_str only.
+def _cs_keys(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Column, Column]:
+    """The customer-supplier rows of orders ⋈ lineitem as `(df, ck, sk)`:
+    a frame and the custkey / suppkey column expressions over it.
 
-    The DISTINCT runs on ONE packed long (custkey * M + suppkey) when the
-    footer-stat key bounds prove the packing exact (M = next power of two
-    above max suppkey; product bounded by 2^63) — single-column hashing +
-    half the exchange bytes measured 57 -> 26 s on the 58.7M-pair distinct
-    at sf10. Key domains that outgrow the packable range (the sf100
-    replica shift) fall back to the two-column distinct, exact either way.
-    """
+    When the footer-stat key bounds prove the packing exact, `df` is ONE
+    packed long p = custkey * M + suppkey (M = next power of two above
+    max suppkey; product bounded by 2^63), and ck = p DIV M, sk = p % M —
+    single-column hashing + half the exchange bytes for whatever shuffles
+    it (measured 57 -> 26 s on the 58.7M-pair distinct at sf10). Key
+    domains that outgrow the packable range (the sf100 replica shift), or
+    missing/negative key statistics, fall back to the two columns
+    (ck, sk); exact either way."""
     o = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     joined = o.join(li, li.l_orderkey == o.o_orderkey)
     max_c = _key_upper_bound(sf_dir, "orders", "o_custkey")
     max_s = _key_upper_bound(sf_dir, "lineitem", "l_suppkey")
-    if max_c is not None and max_s is not None and max_c >= 0 and max_s >= 0:
+    if max_c is not None and max_s is not None:
         mult = 1 << max(max_s, 1).bit_length()
         if (max_c + 1) * mult < (1 << 63):
             packed = joined.select(
                 (F.col("o_custkey") * F.lit(mult) + F.col("l_suppkey")).alias("p")
-            ).distinct()
+            )
             # integer DIV, never `/`: double division loses exactness for
             # packed values above 2^53
-            return packed.select(
-                (F.expr(f"p DIV {mult}") * 2).alias("c_node"),
-                ((F.col("p") % mult) * 2 + 1).alias("s_node"),
-            )
-    return joined.select(
-        (F.col("o_custkey") * 2).alias("c_node"),
-        (F.col("l_suppkey") * 2 + 1).alias("s_node"),
-    ).distinct()
+            return packed, F.expr(f"p DIV {mult}"), F.col("p") % mult
+    cs = joined.select(F.col("o_custkey").alias("ck"), F.col("l_suppkey").alias("sk"))
+    return cs, F.col("ck"), F.col("sk")
+
+
+def _graph_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct bipartite customer-supplier pairs with INTEGER node ids
+    (custkey*2 / suppkey*2+1): the graph kernels shuffle longs, not
+    'c123' strings — half the shuffle bytes and integer hashing on the
+    1M+-edge table at sf0.1+. The display string is formatted only on
+    the final per-node result rows (_graph_node_str). The same
+    even/odd encoding is written inline wherever a query maps raw keys to
+    node ids (_pr_bipartite_rounds, _kcore_grouped, graph_nhop_reach's
+    seed set); _graph_node_str is its one inverse.
+
+    The DISTINCT runs on the _cs_keys frame before the ids are formed:
+    on the packed path that is one long per row."""
+    cs, ck, sk = _cs_keys(spark, sf_dir)
+    return cs.distinct().select((ck * 2).alias("c_node"), (sk * 2 + 1).alias("s_node"))
 
 
 def _grouped_adjacency(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
@@ -853,10 +849,10 @@ def _grouped_adjacency(spark: SparkSession, sf_dir: str, scratch: str) -> DataFr
     per-round groupBy/join on ck rides it exchange-free. deg(c) =
     size(ss): no pair-scale degree exchange, and the stored table is
     customer rows of arrays, not pair rows. Packed-long shuffle when the
-    key bounds allow (same rule as _graph_pairs), two-column fallback
-    otherwise. A/B'd against the distinct-pairs build end-to-end on
-    PageRank (OPTIMIZATION_r09.md, OPTIMIZATION_r10.md): sf1 min-of-3
-    7.26 s vs 7.99 s, and under the r10 bipartite rounds sf0.1 too.
+    key bounds allow (_cs_keys). A/B'd against the distinct-pairs build
+    end-to-end on PageRank (OPTIMIZATION_r09.md, OPTIMIZATION_r10.md):
+    sf1 min-of-3 7.26 s vs 7.99 s, and under the r10 bipartite rounds
+    sf0.1 too.
 
     Storage (r6 memory-vs-disk rule): an AQE-off partitioned checkpoint;
     past _PR_SPILL_LI_ROWS fact rows a ck-bucketed columnar scratch table
@@ -864,21 +860,8 @@ def _grouped_adjacency(spark: SparkSession, sf_dir: str, scratch: str) -> DataFr
     checkpoint cache exhausted one JVM on the sf100 graph; the bucketed
     scan keeps the same partitioning), with dead-pid orphans
     garbage-collected first."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    joined = o.join(li, li.l_orderkey == o.o_orderkey)
+    cs, ck, sk = _cs_keys(spark, sf_dir)
     par = spark.sparkContext.defaultParallelism
-    max_c = _key_upper_bound(sf_dir, "orders", "o_custkey")
-    max_s = _key_upper_bound(sf_dir, "lineitem", "l_suppkey")
-    cs = joined.select(F.col("o_custkey").alias("ck"), F.col("l_suppkey").alias("sk"))
-    ck, sk = F.col("ck"), F.col("sk")
-    if max_c is not None and max_s is not None:
-        mult = 1 << max(max_s, 1).bit_length()
-        if (max_c + 1) * mult < (1 << 63):
-            cs = joined.select(
-                (F.col("o_custkey") * F.lit(mult) + F.col("l_suppkey")).alias("p")
-            )
-            ck, sk = F.expr(f"p DIV {mult}"), F.col("p") % mult
     g = (
         cs.repartition(par, ck)
         .groupBy(ck.alias("ck"))
@@ -891,17 +874,6 @@ def _grouped_adjacency(spark: SparkSession, sf_dir: str, scratch: str) -> DataFr
     gc_dead_scratch(spark, scratch)
     corpus = os.path.join(sf_dir, "lineitem.parquet")
     return spill_bucketed(g, "ck", scratch_name(scratch, corpus))
-
-
-def _graph_edges(pairs: DataFrame) -> DataFrame:
-    """Doubled (both-direction) edge table from the distinct pairs."""
-    return pairs.select(
-        F.col("c_node").alias("src"), F.col("s_node").alias("dst")
-    ).unionAll(pairs.select(F.col("s_node").alias("src"), F.col("c_node").alias("dst")))
-
-
-def _graph_int_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _graph_edges(_graph_pairs(spark, sf_dir))
 
 
 def _graph_node_str(col: str):
@@ -1153,13 +1125,14 @@ def fuzzy_name_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # k-hop BFS reach: minimum hop distance from a seed set over the bipartite
-# customer-supplier order graph (same edge table as PageRank) — the
-# "blast radius" query of lineage/impact analysis. Shape: per round, ONE
-# frontier⋈edges equi-join (frontier is the only thing that moves; at
-# real scale it's the small side and broadcasts) + an anti-join against
-# the visited set; the static edge table is localCheckpoint'ed once. The
-# unrolled-round DAG is linear — each round feeds exactly one consumer —
-# so Catalyst executes it as one job, like the PageRank rounds.
+# customer-supplier order graph (the doubled _graph_pairs edge table,
+# GR.doubled) — the "blast radius" query of lineage/impact analysis.
+# Shape: per round, ONE frontier⋈edges equi-join (frontier is the only
+# thing that moves; at real scale it's the small side and broadcasts) +
+# an anti-join against the visited set; the static edge table is
+# localCheckpoint'ed once. The unrolled-round DAG is linear — each round
+# feeds exactly one consumer — so Catalyst executes it as one job, like
+# the PageRank rounds.
 # ---------------------------------------------------------------------------
 
 _BFS_HOPS = 3
@@ -1194,8 +1167,8 @@ def _bfs_round_sql(k: int) -> str:
 )
 def graph_nhop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = table(spark, sf_dir, "customer")
-    # static graph, read every round; integer node ids (see _graph_int_edges)
-    edges = _graph_int_edges(spark, sf_dir).localCheckpoint()
+    # static graph, read every round; integer node ids (see _graph_pairs)
+    edges = GR.doubled(_graph_pairs(spark, sf_dir), "c_node", "s_node").localCheckpoint()
     frontier = (
         cust.filter(F.col("c_custkey") < 10)
         .select((F.col("c_custkey") * 2).alias("node"))
@@ -1240,6 +1213,46 @@ def graph_nhop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LPA_ROUNDS = 2
 
 
+def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The part co-purchase graph: (pa, pb), pa < pb, for part pairs
+    ordered together in >= 2 DISTINCT orders — the oracles' lineitem
+    self-join `GROUP BY pa, pb HAVING COUNT(DISTINCT l_orderkey) >= 2`.
+
+    Built from per-basket sorted arrays (GR.baskets -> GR.pairs_within),
+    NOT a lineitem self-join (r8, basket_part_affinity's lesson): the join
+    form shuffles BOTH lineitem copies and routes every candidate row
+    through the join operator; combinations generate after ONE
+    orderkey-grouped exchange (triangle census measured ~0.9 s faster at
+    sf0.1, label propagation 2.73 -> 1.92 s). Baskets hold distinct
+    parts, so the per-pair count(*) is the distinct-order support. Lazy:
+    each caller materializes it as its own consumers need."""
+    li = table(spark, sf_dir, "lineitem")
+    return (
+        GR.pairs_within(GR.baskets(li), "parts", "pa", "pb")
+        .groupBy("pa", "pb")
+        .agg(F.count("*").alias("n_ord"))
+        .filter(F.col("n_ord") >= 2)
+        .select("pa", "pb")
+    )
+
+
+def _min_labels(edges: DataFrame) -> DataFrame:
+    """(v, lbl): _LPA_ROUNDS synchronous min-label rounds over the doubled
+    (src, dst) edge table, starting from every node labelled with itself —
+    each round is one src-keyed join + one node-keyed min aggregate."""
+    labels = edges.select(F.col("src").alias("v")).distinct().select(
+        "v", F.col("v").alias("lbl")
+    )
+    for _ in range(_LPA_ROUNDS):
+        propagated = edges.join(labels, edges.src == labels.v).select(
+            F.col("dst").alias("v"), "lbl"
+        )
+        labels = (
+            labels.unionByName(propagated).groupBy("v").agg(F.min("lbl").alias("lbl"))
+        )
+    return labels
+
+
 @query(
     "graph_label_propagation",
     oracle=f"""
@@ -1272,50 +1285,9 @@ _LPA_ROUNDS = 2
     """,
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NO .distinct() before the basket groupBy (r9-opt, guide §2.4):
-    # collect_set already de-dups parts within each order, so a separate
-    # (orderkey, partkey) DISTINCT is a redundant second fact-scale
-    # exchange — the basket aggregate is the only one needed
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # basket-array pair build (r9-opt; the graph_triangle_census /
-    # graph_modularity_score shape, measured 2.73→1.92 s when triangle
-    # census converted in r8): ONE orderkey exchange + in-memory
-    # combinations from each order's sorted part array, instead of the
-    # fact-scale equi-self-join whose join output is the same pair
-    # multiset but built by shuffling lineitem twice. count(*) on
-    # distinct-(order,part) input == the distinct-order support count.
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts")
-    )
-    pairs = (
-        baskets.select(F.posexplode("parts").alias("i", "pa"), F.col("parts"))
-        .select(
-            "pa",
-            F.explode(F.expr("slice(parts, i + 2, size(parts))")).alias("pb"),
-        )
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("n_ord"))
-        .filter(F.col("n_ord") >= 2)
-        .select("pa", "pb")
-    )
-    edges = (
-        pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-        .unionAll(pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
-        .localCheckpoint()
-    )
-    labels = edges.select(F.col("src").alias("v")).distinct().select(
-        "v", F.col("v").alias("lbl")
-    )
-    for _ in range(_LPA_ROUNDS):
-        propagated = (
-            edges.join(labels, edges.src == labels.v)
-            .select(F.col("dst").alias("v"), "lbl")
-        )
-        labels = (
-            labels.unionByName(propagated)
-            .groupBy("v")
-            .agg(F.min("lbl").alias("lbl"))
-        )
+    # the static edge table feeds both rounds and the node set
+    edges = GR.doubled(_copurchase_pairs(spark, sf_dir), "pa", "pb").localCheckpoint()
+    labels = _min_labels(edges)
     return labels.groupBy(F.col("lbl").cast("bigint").alias("community")).agg(
         F.count("*").alias("n_members"),
         F.max("v").cast("bigint").alias("max_member"),
@@ -1414,17 +1386,17 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Triangle census + global clustering coefficient over the part
-# co-purchase graph (same edge rule as label propagation: parts sharing
-# >= 2 distinct orders). Degree-ORIENTED counting — each undirected edge
-# is directed from its (degree, id)-smaller endpoint to the larger, so
-# every triangle is generated by exactly ONE wedge at its smallest-degree
-# corner and out-degrees are bounded by O(sqrt(E)) (the classic bound:
-# a node of out-degree d has d neighbors of degree >= its own, so
-# d^2 <= sum of degrees = 2E). The wedge self-join is therefore capped by
-# the orientation itself — the same hot-key discipline the LSH caps
-# enforce, here falling out of the algorithm (a celebrity node generates
-# NO wedges at its own corner; its triangles are counted at their
-# low-degree corners).
+# co-purchase graph (_copurchase_pairs, shared by every part-graph
+# query: parts sharing >= 2 distinct orders). Degree-ORIENTED counting —
+# each undirected edge is directed from its (degree, id)-smaller endpoint
+# to the larger, so every triangle is generated by exactly ONE wedge at
+# its smallest-degree corner and out-degrees are bounded by O(sqrt(E))
+# (the classic bound: a node of out-degree d has d neighbors of degree
+# >= its own, so d^2 <= sum of degrees = 2E). The wedge self-join is
+# therefore capped by the orientation itself — the same hot-key
+# discipline the LSH caps enforce, here falling out of the algorithm (a
+# celebrity node generates NO wedges at its own corner; its triangles
+# are counted at their low-degree corners).
 #
 # Exact integers end-to-end; the clustering coefficient 3T / W (W =
 # sum C(deg,2) — undirected wedges) is the single final IEEE division.
@@ -1472,33 +1444,7 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def graph_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from brooklin_spark.operators.graph import triangle_census
-
-    li = table(spark, sf_dir, "lineitem")
-    # co-purchase pairs from per-basket sorted arrays (collect_set ->
-    # posexplode x slice), NOT a lineitem self-join — the
-    # basket_part_affinity lesson applied here (r8): the join form
-    # shuffles BOTH lineitem copies and routes every candidate row
-    # through the join operator; combinations generate after ONE
-    # orderkey-grouped exchange. collect_set de-dups (orderkey, part), so
-    # the per-pair count(*) IS the distinct-order count the old
-    # countDistinct computed — value-identical, measured ~0.9 s faster
-    # at sf0.1.
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts")
-    )
-    pairs = (
-        baskets.select(F.posexplode("parts").alias("i", "pa"), F.col("parts"))
-        .select(
-            "pa",
-            F.explode(F.expr("slice(parts, i + 2, size(parts))")).alias("pb"),
-        )
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("n_ord"))
-        .filter(F.col("n_ord") >= 2)
-        .select("pa", "pb")
-    )
-    return triangle_census(pairs)
+    return GR.triangle_census(_copurchase_pairs(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -1961,47 +1907,11 @@ def _kcore_peel(deg: DataFrame, decrements) -> DataFrame:
     """,
 )
 def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NO .distinct() before the basket groupBy (r9-opt, guide §2.4):
-    # collect_set already de-dups parts within each order, so a separate
-    # (orderkey, partkey) DISTINCT is a redundant second fact-scale
-    # exchange — the basket aggregate is the only one needed
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # basket-array pair build (the graph_triangle_census shape): one
-    # orderkey exchange, combinations from sorted per-order arrays;
-    # count(*) on distinct-(order,part) input == the distinct-order count
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts")
-    )
-    pairs = (
-        baskets.select(F.posexplode("parts").alias("i", "pa"), F.col("parts"))
-        .select(
-            "pa",
-            F.explode(F.expr("slice(parts, i + 2, size(parts))")).alias("pb"),
-        )
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("n_ord"))
-        .filter(F.col("n_ord") >= 2)
-        .select("pa", "pb")
-        # three consumers (edges both ways + within-community join) — one
-        # materialization instead of three basket passes
-        .localCheckpoint(eager=False)
-    )
-    edges = pairs.select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst")
-    ).unionAll(pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
-    labels = (
-        edges.select(F.col("src").alias("v"))
-        .distinct()
-        .select("v", F.col("v").alias("lbl"))
-    )
-    for _ in range(_LPA_ROUNDS):
-        propagated = edges.join(labels, edges.src == labels.v).select(
-            F.col("dst").alias("v"), "lbl"
-        )
-        labels = (
-            labels.unionByName(propagated).groupBy("v").agg(F.min("lbl").alias("lbl"))
-        )
-    labels = labels.localCheckpoint(eager=False)  # two consumers below
+    # three consumers (edges both ways + within-community join) — one
+    # materialization instead of three basket passes
+    pairs = _copurchase_pairs(spark, sf_dir).localCheckpoint(eager=False)
+    edges = GR.doubled(pairs, "pa", "pb")
+    labels = _min_labels(edges).localCheckpoint(eager=False)  # two consumers below
     deg = edges.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("d"))
     la = labels.select(F.col("v").alias("pa"), F.col("lbl").alias("lbl_a"))
     lb = labels.select(F.col("v").alias("pb"), F.col("lbl").alias("lbl_b"))
@@ -2090,38 +2000,13 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_common_neighbor_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    # NO .distinct() before the basket groupBy (r9-opt, guide §2.4):
-    # collect_set already de-dups parts within each order, so a separate
-    # (orderkey, partkey) DISTINCT is a redundant second fact-scale
-    # exchange — the basket aggregate is the only one needed
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts")
-    )
-    pairs = (
-        baskets.select(F.posexplode("parts").alias("i", "pa"), F.col("parts"))
-        .select(
-            "pa",
-            F.explode(F.expr("slice(parts, i + 2, size(parts))")).alias("pb"),
-        )
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("n_ord"))
-        .filter(F.col("n_ord") >= 2)
-        .select("pa", "pb")
-        .localCheckpoint(eager=False)  # two consumers: adjacency + anti-join
-    )
-    edges = pairs.select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst")
-    ).unionAll(pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
+    # two consumers: adjacency + anti-join
+    pairs = _copurchase_pairs(spark, sf_dir).localCheckpoint(eager=False)
     # adjacency arrays at the wedge center: one src exchange, sorted
     # neighbor combinations generate locally (na < nb by sort order)
-    adj = edges.groupBy("src").agg(F.array_sort(F.array_distinct(F.collect_list("dst"))).alias("nb"))
+    adj = GR.sorted_adjacency(GR.doubled(pairs, "pa", "pb"))
     wedges = (
-        adj.select(F.posexplode("nb").alias("i", "na"), F.col("nb"))
-        .select(
-            "na",
-            F.explode(F.expr("slice(nb, i + 2, size(nb))")).alias("nb"),
-        )
+        GR.pairs_within(adj, "nb", "na", "nb")
         .groupBy("na", "nb")
         .agg(F.count("*").alias("cn"))
         .filter(F.col("cn") >= 2)
@@ -2284,25 +2169,7 @@ def dedup_threshold_survivor_curve(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NO .distinct() before the basket groupBy (r9-opt, guide §2.4):
-    # collect_set already de-dups parts within each order, so a separate
-    # (orderkey, partkey) DISTINCT is a redundant second fact-scale
-    # exchange — the basket aggregate is the only one needed
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts")
-    )
-    pairs = (
-        baskets.select(F.posexplode("parts").alias("i", "pa"), F.col("parts"))
-        .select(
-            "pa",
-            F.explode(F.expr("slice(parts, i + 2, size(parts))")).alias("pb"),
-        )
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("n_ord"))
-        .filter(F.col("n_ord") >= 2)
-        .select("pa", "pb")
-    )
+    pairs = _copurchase_pairs(spark, sf_dir)
     # r10-opt (guide §2.3/§2.4, VERDICT item 6): the r9 shape checkpointed
     # the DOUBLED edge table and re-exchanged it twice (deg groupBy + the
     # s_v groupBy after the edge-scale deg join). One grouped adjacency
@@ -2480,51 +2347,17 @@ def dedup_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    # NO .distinct() before the basket groupBy (r9-opt, guide §2.4):
-    # collect_set already de-dups parts within each order, so a separate
-    # (orderkey, partkey) DISTINCT is a redundant second fact-scale
-    # exchange — the basket aggregate is the only one needed
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts")
-    )
-    pairs = (
-        baskets.select(F.posexplode("parts").alias("i", "pa"), F.col("parts"))
-        .select(
-            "pa",
-            F.explode(F.expr("slice(parts, i + 2, size(parts))")).alias("pb"),
-        )
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("n_ord"))
-        .filter(F.col("n_ord") >= 2)
-        .select("pa", "pb")
-        .localCheckpoint(eager=False)  # two consumers: adjacency + anti-join
-    )
-    edges = pairs.select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst")
-    ).unionAll(pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
+    # two consumers: adjacency + anti-join
+    pairs = _copurchase_pairs(spark, sf_dir).localCheckpoint(eager=False)
     # adjacency at the wedge center; degree = size(nb) — no separate
     # degree table or join, the array already carries it. deg-1 centers
     # generate no wedges AND would make 1/ln(1) divide by zero under
     # ANSI (the weight projects before the explode prunes them), so
-    # they are filtered here.
-    adj = (
-        edges.groupBy("src")
-        .agg(F.array_sort(F.array_distinct(F.collect_list("dst"))).alias("nb"))
-        .filter(F.size("nb") >= 2)
-    )
+    # they are filtered here. The weight is computed once per center.
+    adj = GR.sorted_adjacency(GR.doubled(pairs, "pa", "pb")).filter(F.size("nb") >= 2)
     w_center = 1.0 / F.log(F.size("nb").cast("double"))
     wedges = (
-        adj.select(
-            F.posexplode("nb").alias("i", "na"),
-            F.col("nb"),
-            w_center.alias("w"),
-        )
-        .select(
-            "na",
-            F.explode(F.expr("slice(nb, i + 2, size(nb))")).alias("nb"),
-            "w",
-        )
+        GR.pairs_within(adj.select("nb", w_center.alias("w")), "nb", "na", "nb", "w")
         .groupBy("na", "nb")
         .agg(F.round(F.sum("w"), 6).alias("aa"), F.count("*").alias("cn"))
         .filter(F.col("cn") >= 2)
@@ -2595,42 +2428,10 @@ def graph_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NO .distinct() before the basket groupBy (r9-opt, guide §2.4):
-    # collect_set already de-dups parts within each order, so a separate
-    # (orderkey, partkey) DISTINCT is a redundant second fact-scale
-    # exchange — the basket aggregate is the only one needed
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts")
-    )
-    pairs = (
-        baskets.select(F.posexplode("parts").alias("i", "pa"), F.col("parts"))
-        .select(
-            "pa",
-            F.explode(F.expr("slice(parts, i + 2, size(parts))")).alias("pb"),
-        )
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("n_ord"))
-        .filter(F.col("n_ord") >= 2)
-        .select("pa", "pb")
-        .localCheckpoint(eager=False)  # consumers: wedges closure + degree
-    )
-    edges = pairs.select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst")
-    ).unionAll(pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
-    adj = edges.groupBy("src").agg(F.array_sort(F.array_distinct(F.collect_list("dst"))).alias("nb"))
-    wedges = (
-        adj.select(
-            F.col("src").alias("c"),
-            F.posexplode("nb").alias("i", "na"),
-            F.col("nb"),
-        )
-        .select(
-            "c",
-            "na",
-            F.explode(F.expr("slice(nb, i + 2, size(nb))")).alias("nb"),
-        )
-    )
+    # consumers: wedges closure + degree
+    pairs = _copurchase_pairs(spark, sf_dir).localCheckpoint(eager=False)
+    adj = GR.sorted_adjacency(GR.doubled(pairs, "pa", "pb"))
+    wedges = GR.pairs_within(adj.withColumnRenamed("src", "c"), "nb", "na", "nb", "c")
     # NB: wedges.na would resolve to DataFrameNaFunctions, not the column
     tri = (
         wedges.join(
@@ -2677,9 +2478,10 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 # consumers — the L1 sum and the division — which would otherwise
 # double the lazy DAG per half-step, the measured pagerank failure
 # mode). Top-20 is TakeOrderedAndProject. 100 TB: per-iteration data
-# motion is node-scale scores against the partition-stable pair table;
-# under the PageRank spill threshold the pair table would move to a
-# bucketed scratch table the same way (dedup.py:972-981).
+# motion is node-scale scores against the checkpointed pair table. That
+# table is an eager in-memory localCheckpoint at every scale: HITS has
+# no columnar spill (PageRank's _PR_SPILL_LI_ROWS rule covers only
+# _grouped_adjacency).
 # ---------------------------------------------------------------------------
 
 _HITS_ITERS = 3

@@ -759,6 +759,27 @@ def test_label_propagation_edges_built_once(spark, sf_correct):
     assert "windowspecdefinition" not in plan, plan
 
 
+def test_copurchase_pairs_one_basket_exchange_no_join(spark, sf_correct):
+    """The co-purchase graph the part-graph queries share is ONE lineitem
+    scan, the orderkey basket exchange and the pair-support exchange:
+    pairs generate inside the row pipeline (posexplode x slice over each
+    basket), never through a lineitem self-join."""
+    import re
+
+    from brooklin_spark.queries.dedup import _copurchase_pairs
+
+    df = _copurchase_pairs(spark, sf_correct)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    exchanges = re.findall(r"Exchange (\w+\(?\w*)", plan)
+    assert sorted(exchanges) == [
+        "hashpartitioning(l_orderkey",
+        "hashpartitioning(pa",
+    ], plan
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert len(scans) == 1 and "lineitem" in scans[0], plan
+    assert "Join" not in plan, plan
+
+
 def test_pareto_abc_no_fact_scale_global_window(spark, sf_correct):
     """The global cumulative share must come from the distrank prefix-sum
     decomposition: every window is either hash-partitioned or the
