@@ -1,16 +1,23 @@
-"""Document deduplication operators: exact, n-gram Jaccard, MinHash+LSH,
-SimHash.
+"""Document deduplication operators: n-gram Jaccard, MinHash+LSH, SimHash
+and near-duplicate clusters.
 
 The reference has no record-level dedup (SURVEY.md §2.7 — at-least-once
 only); these are the north-star LLM-pipeline operators, built Spark-first:
 
-- every hash is md5 (identical across engines → oracle-checkable);
-- MinHash signatures are column-wise ``min()`` aggregates over exploded
-  shingles (map-side partial min, one shuffle per doc set);
-- LSH banding turns the O(n²) pair space into per-band equi-joins —
+- shingling and signatures are Arrow-batched pandas kernels, map-side and
+  shuffle-free (Spark's array higher-order functions are interpreted per
+  element); every signature hash is md5, identical across engines, so the
+  DuckDB oracles rebuild the same signatures in SQL;
+- exact Jaccard is one posting-capped self-join on the hashed shingle
+  rows; ``near_dup_pairs`` and ``near_dup_components`` are the one build
+  of the near-duplicate pair set and of its clusters that queries share;
+- MinHash signatures use Kirsch-Mitzenmacher double hashing (one md5 per
+  shingle), and ``band_rows`` turns them into per-band equi-join keys —
   the 100 TB path: candidates per band bucket, verify only candidates;
-- SimHash is a per-word parity vote, one groupBy, then banded or
-  all-pairs hamming verification.
+- SimHash signatures are 32-bit BIGINTs of per-digit md5 parity votes;
+  ``simhash_band_rows`` bands them by shift+mask, and hamming verification
+  is ``bit_count(xor)`` inline in the band join (Manku pigeonhole: with
+  ``max_distance < bands`` the banded candidate set is exact).
 
 Scale notes: the only all-pairs product here is candidate verification;
 at 100 TB you keep band rows small (tune bands × rows_per_band to the
@@ -28,39 +35,8 @@ import operator as pyop
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def tokens_col(text_col: str = "text") -> Column:
-    """Whitespace tokens with empties dropped (parity: list_filter(string_split))."""
-    return F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-
-
-def shingle_arrays(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """Per-document DISTINCT word n-gram shingle array: (id, shingles).
-
-    Entirely map-side (split → shifted-slice zip_with → array_distinct):
-    no shuffle beyond the initial repartition that spreads a small-file
-    corpus across cores. Keeping shingles as an array per doc means
-    dedup stages that only need per-doc views (signatures, set sizes,
-    intersection verify) never pay an explode+groupBy round trip.
-    """
-    # Shifted-slice zip_with: gram_i = toks[i] + ' ' + toks[i+1] + ... built
-    # by zipping n shifted views of the token array. Constant number of
-    # split() evaluations per row — element_at(toks, i) inside a transform
-    # would re-evaluate the split per index (O(tokens²) per doc).
-    toks = tokens_col(text_col)
-    cnt = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    grams = F.slice(toks, 1, cnt)
-    for j in range(1, n):
-        shifted = F.slice(toks, 1 + j, cnt)
-        grams = F.zip_with(grams, shifted, lambda a, b: F.concat(a, F.lit(" "), b))
-    return df.repartition(F.col(id_col)).select(
-        F.col(id_col).alias("id"), F.array_distinct(grams).alias("shingles")
-    )
 
 
 def shingle_arrays_pandas(
@@ -75,12 +51,12 @@ def shingle_arrays_pandas(
     untouched so downstream per-doc projections (e.g. the video near-dup
     boilerplate hashes keyed on lang) need no join back to the corpus.
 
-    Same output as shingle_arrays (first-occurrence order, empty array for
-    docs shorter than n tokens), ~3x faster measured at sf0.1: Spark's
-    array higher-order functions are interpreted per element (see the r1
-    perf lesson — HOFs are NOT codegen'd), while this is one vectorized
-    Python call per Arrow batch. Map-side and partition-preserving, so the
-    scale story is unchanged: no shuffle, work is O(tokens) per row.
+    Shingles keep first-occurrence order and docs shorter than n tokens get
+    an empty array — the same sets shingle_rows_pandas emits as rows. ~3x
+    faster at sf0.1 than the equivalent Spark array higher-order-function
+    expression, which is interpreted per element (HOFs are NOT codegen'd),
+    while this is one vectorized Python call per Arrow batch. Map-side and
+    partition-preserving: no shuffle, work is O(tokens) per row.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -151,89 +127,44 @@ def shingle_rows_pandas(
     )
 
 
-def word_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per document: (id, shingle) rows.
-
-    Distinctness comes from the per-doc array_distinct — no global
-    distinct shuffle (the old plan's costliest stage).
-    """
-    return shingle_arrays(df, id_col, text_col, n).select(
-        "id", F.explode("shingles").alias("shingle")
+def hashed_shingle_rows(docs: DataFrame) -> DataFrame:
+    """(id, n, shingle) rows of the documents' distinct word 3-gram
+    shingles, each shingle keyed by xxhash64 (codegen, 8-byte shuffle keys
+    instead of 3-word strings; a 64-bit collision inside one doc pair is
+    the accepted ~1e-10 risk, standard for shingle tables at scale). Lazy:
+    the caller picks the materialization."""
+    return shingle_rows_pandas(docs, n=3).select(
+        "id", "n", F.xxhash64("shingle").alias("shingle")
     )
 
 
 #: default posting-list cap: a shingle shared by more docs than this is
 #: treated as stopword-like and dropped from pair generation (precision
-#: trade documented in the functions below). 1024² pair expansions per
+#: trade documented in capped_postings). 1024² pair expansions per
 #: shingle is the worst case a single task ever sees.
 MAX_POSTING = 1024
 
 
-def pair_common_counts(shingles: DataFrame, max_posting: int = MAX_POSTING) -> DataFrame:
-    """(id, shingle) rows -> (id_a, id_b, common): co-occurrence counts for
-    every doc pair sharing >=1 shingle, id_a < id_b.
+def capped_postings(shingles: DataFrame, max_posting: int = MAX_POSTING) -> DataFrame:
+    """Drop the rows of every shingle shared by more than ``max_posting``
+    docs. The cap is a COUNT WINDOW over the shingle-keyed exchange the
+    pair self-join consumes, so the posting count costs no extra pass
+    over the shingle rows (measured ~1s faster than a separate
+    count+anti-join at sf0.1).
 
-    Shape: posting-count map-side aggregate → broadcast anti-join dropping
-    hot shingles → equi-self-join on shingle → pair groupBy. All codegen
-    (measured ~2x the grouped HOF pair expansion at sf0.1 — array HOFs are
-    interpreted); the shingle exchange is shared between the count and the
-    join sides.
+    The cap is what keeps the self-join skew-safe: a stopword-like
+    shingle at web scale otherwise expands one task quadratically.
+    Dropping those postings is the standard precision trade — a pair
+    sharing ONLY ultra-common shingles is not a near-duplicate; every pair
+    sharing any discriminative shingle is unaffected."""
+    from pyspark.sql import Window as W
 
-    The ``max_posting`` cap is ENFORCED here (VERDICT r1 'what's wrong'
-    #1): a stopword-like shingle at web scale otherwise expands one task
-    quadratically (collect/join blowup → OOM). Dropping those postings is
-    the standard precision trade — a pair sharing ONLY ultra-common
-    shingles is not a near-duplicate; every pair sharing any discriminative
-    shingle is unaffected.
-    """
-    hot = (
-        shingles.groupBy("shingle")
-        .agg(F.count("*").alias("c"))
-        .filter(F.col("c") > max_posting)
-        .select("shingle")
-    )
-    capped = shingles.join(F.broadcast(hot), "shingle", "left_anti")
-    a = capped.alias("a")
-    b = capped.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.id") < F.col("b.id")),
+        shingles.withColumn(
+            "c", F.count("*").over(W.partitionBy("shingle"))
         )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("common"))
-    )
-
-
-def pair_common_counts_grouped(
-    shingles: DataFrame, max_posting: int = MAX_POSTING
-) -> DataFrame:
-    """Grouped-posting-list variant of pair_common_counts: one
-    groupBy(shingle) collecting the posting list, in-group upper-triangle
-    pair expansion, one groupBy(pair). Same capped semantics. Prefer when
-    the extra self-join shuffle dominates (very wide clusters); the HOF
-    expansion is interpreted, so the default self-join path wins locally.
-    """
-    grouped = (
-        shingles.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_posting))
-    )
-    pairs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + F.lit(2), F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    return (
-        grouped.select(F.explode(pairs).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("common"))
+        .filter(F.col("c") <= max_posting)
+        .drop("c")
     )
 
 
@@ -244,29 +175,19 @@ def jaccard_pairs_selfjoin(
     self-join pass: ``shingles`` is (id, n, shingle) with the per-doc set
     size CARRIED on every shingle row, so the pair groupBy aggregates
     (id_a, id_b, na, nb) together and the two size-lookup joins of the
-    classic shape disappear entirely — plan: [hot-shingle cap] →
+    classic shape disappear entirely — plan: capped_postings →
     self-join on shingle → one groupBy → filter. Carrying n costs 8
     bytes/row in the shuffle; each removed join was a full shuffle or a
     broadcast barrier.
 
-    The ``max_posting`` cap is enforced as a COUNT WINDOW over the same
-    shingle-keyed exchange the join consumes: both join sides canonicalize
-    to the identical windowed subtree, so ReuseExchange shuffles the
-    shingle rows ONCE, the posting count is read off that exchange for
-    free, and the upstream pandas shingler runs a single time without any
-    checkpoint (measured ~1s faster than a separate count+anti-join pass
-    at sf0.1). Same skew-safety semantics as pair_common_counts.
+    Spark never reuses an exchange across pandas-UDF subtrees, so over an
+    un-checkpointed shingler each join side runs the kernel once (the
+    executed plan of dedup_ngram_jaccard at sf0.01 holds 2 Python map
+    nodes and 0 ReusedExchange). near_dup_pairs checkpoints the shingle
+    rows first so the kernel runs once.
     Returns (doc_a, doc_b, jaccard), doc_a < doc_b.
     """
-    from pyspark.sql import Window as W
-
-    capped = (
-        shingles.withColumn(
-            "c", F.count("*").over(W.partitionBy("shingle"))
-        )
-        .filter(F.col("c") <= max_posting)
-        .drop("c")
-    )
+    capped = capped_postings(shingles, max_posting)
     a = capped.alias("a")
     b = capped.alias("b")
     common = (
@@ -289,118 +210,18 @@ def jaccard_pairs_selfjoin(
     ).filter(F.col("jaccard") >= threshold)
 
 
-def jaccard_pairs_grouped_numpy(
-    shingles: DataFrame, threshold: float, max_posting: int = MAX_POSTING
-) -> DataFrame:
-    """Exact all-pairs Jaccard via grouped posting blocks + vectorized
-    numpy pair expansion — the single-consumption rewrite of
-    jaccard_pairs_selfjoin (VERDICT r2 next-round #3).
+def near_dup_pairs(docs: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for every document pair at Jaccard >=
+    ``threshold`` over 3-gram shingles. The hashed shingle rows are
+    checkpointed so the pandas shingler runs once for both join sides."""
+    return jaccard_pairs_selfjoin(hashed_shingle_rows(docs).localCheckpoint(), threshold)
 
-    Why: the self-join shape consumes the shingle table TWICE, and Spark
-    cannot reuse an exchange across pandas-UDF subtrees (python UDF nodes
-    never canonicalize equal), so the upstream shingler ran once per join
-    side — and with the size+explode dual reference, twice per side. This
-    shape touches the shingle stream ONCE:
 
-      shingles (id, n, shingle)
-        → ONE exchange keyed on shingle
-        → count window (cap: drop c>max_posting hot shingles AND c<2
-          singletons — most rows die here, before any array exists)
-        → collect_list posting blocks on the SAME partitioning (no second
-          exchange)
-        → mapInPandas: all posting lists in an Arrow batch expand to
-          (id_a, id_b) pairs in ONE numpy triangular-index computation
-          (no per-group Python call), locally combined with np.unique
-        → final groupBy((id_a, id_b)) sums partial counts → jaccard.
-
-    Skew safety matches the window-cap self-join: the cap filter runs on
-    the count window, so a stopword shingle's rows are dropped BEFORE
-    collect_list materializes any array. Pair work is inherently O(Σc²)
-    — that is what exact all-pairs means; LSH is the sub-quadratic path.
-    Returns (doc_a, doc_b, jaccard), doc_a < doc_b.
-    """
-    from pyspark.sql import Window as W
-
-    posting = (
-        shingles.withColumn("c", F.count("*").over(W.partitionBy("shingle")))
-        .filter((F.col("c") >= 2) & (F.col("c") <= max_posting))
-        .groupBy("shingle")
-        .agg(
-            F.collect_list(F.struct(F.col("id"), F.col("n"))).alias("docs")
-        )
-        .select("docs")
-    )
-
-    def expand(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            lists = pdf["docs"].tolist()
-            lens = np.fromiter((len(g) for g in lists), dtype=np.int64)
-            flat_id = np.fromiter(
-                (d["id"] for g in lists for d in g), dtype=np.int64
-            )
-            flat_n = np.fromiter(
-                (d["n"] for g in lists for d in g), dtype=np.int64
-            )
-            cnt = lens * (lens - 1) // 2
-            total = int(cnt.sum())
-            if total == 0:
-                continue
-            grp = np.repeat(np.arange(len(lens)), cnt)
-            starts = np.concatenate(([0], np.cumsum(cnt)[:-1]))
-            r = np.arange(total) - np.repeat(starts, cnt)
-            L = lens[grp]
-            # invert the row-major upper-triangle rank: first index i is
-            # the largest i with C(i) = i(2L-1-i)/2 <= r; float sqrt then
-            # integer correction (exact for L <= max_posting)
-            i = ((2 * L - 1) - np.sqrt((2 * L - 1) ** 2 - 8 * r)) // 2
-            i = i.astype(np.int64)
-            ci = i * (2 * L - 1 - i) // 2
-            over = ci > r
-            i -= over
-            ci[over] = i[over] * (2 * L[over] - 1 - i[over]) // 2
-            j = r - ci + i + 1
-            off = np.repeat(np.concatenate(([0], np.cumsum(lens)[:-1])), cnt)
-            a_idx, b_idx = off + i, off + j
-            ia, ib = flat_id[a_idx], flat_id[b_idx]
-            na, nb = flat_n[a_idx], flat_n[b_idx]
-            swap = ia > ib
-            ia2 = np.where(swap, ib, ia)
-            ib2 = np.where(swap, ia, ib)
-            na2 = np.where(swap, nb, na)
-            nb2 = np.where(swap, na, nb)
-            # local combine: one sort-based unique over the pair keys cuts
-            # the shuffled rows by each pair's in-partition multiplicity
-            order = np.lexsort((ib2, ia2))
-            ia2, ib2, na2, nb2 = ia2[order], ib2[order], na2[order], nb2[order]
-            new = np.empty(total, dtype=bool)
-            new[0] = True
-            new[1:] = (ia2[1:] != ia2[:-1]) | (ib2[1:] != ib2[:-1])
-            idx = np.nonzero(new)[0]
-            common = np.diff(np.concatenate((idx, [total])))
-            yield pd.DataFrame(
-                {
-                    "id_a": ia2[idx],
-                    "id_b": ib2[idx],
-                    "na": na2[idx],
-                    "nb": nb2[idx],
-                    "common": common,
-                }
-            )
-
-    partial = posting.mapInPandas(
-        expand, schema="id_a bigint, id_b bigint, na bigint, nb bigint, common bigint"
-    )
-    agg = partial.groupBy("id_a", "id_b", "na", "nb").agg(
-        F.sum("common").alias("common")
-    )
-    jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
-    return agg.select(
-        F.col("id_a").alias("doc_a"),
-        F.col("id_b").alias("doc_b"),
-        jac.alias("jaccard"),
-    ).filter(F.col("jaccard") >= threshold)
+def near_dup_components(docs: DataFrame) -> DataFrame:
+    """(id, comp) near-duplicate clusters: connected components of the
+    Jaccard >= 0.7 pairs, comp = the cluster's min doc id. Documents in no
+    pair have no row."""
+    return connected_components(near_dup_pairs(docs, 0.7).select("doc_a", "doc_b"))
 
 
 def jaccard_verify(
@@ -429,108 +250,18 @@ def jaccard_verify(
     )
 
 
-def jaccard_pairs(
-    shingles: DataFrame,
-    threshold: float,
-    candidates: DataFrame | None = None,
-) -> DataFrame:
-    """Exact Jaccard similarity for document pairs sharing >=1 shingle.
-
-    ``candidates`` (id_a, id_b) restricts the pair space (the LSH path);
-    without it the pair space is the shingle self-join (only sane at small
-    scale — at 100 TB always pass candidates).
-    Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
-    """
-    sizes = shingles.groupBy("id").agg(F.count("*").alias("n_sh"))
-    if candidates is not None:
-        # candidates-first: only candidate pairs ever reach the shingle
-        # intersection — the whole point of LSH at scale. Two equi-joins
-        # keyed on doc id, then count matching shingles per pair.
-        cand = candidates.select(
-            F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
-        ).distinct()
-        sa_sh = shingles.select(F.col("id").alias("doc_a"), F.col("shingle").alias("sh"))
-        sb_sh = shingles.select(F.col("id").alias("doc_b"), F.col("shingle").alias("sh"))
-        common = (
-            cand.join(sa_sh, "doc_a")
-            .join(sb_sh, ["doc_b", "sh"])  # equi-join on (doc, shingle)
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("common"))
-        )
-    else:
-        a = shingles.alias("a")
-        b = shingles.alias("b")
-        common = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            .groupBy(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
-            .agg(F.count("*").alias("common"))
-        )
-    sa = sizes.select(F.col("id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def minhash_signature_arrays(arrays: DataFrame, num_hashes: int = 16) -> DataFrame:
-    """MinHash signature computed map-side from per-doc shingle arrays:
-    h_k = array_min(transform(shingles, s -> md5(k || ':' || s))).
-
-    Zero shuffles — the signature exists before any exchange, so at scale
-    the only shuffled data is (id, 16 hashes), never the shingle rows.
-    Lexicographic min over lowercase hex == uniform min-hash.
-    """
-    cols = [
-        F.array_min(
-            F.transform(
-                F.col("shingles"),
-                lambda s: F.md5(F.concat(F.lit(f"{k}:"), s)),
-            )
-        ).alias(f"h{k}")
-        for k in range(num_hashes)
-    ]
-    return arrays.select("id", *cols)
-
-
-def minhash_signature_km(shingles: DataFrame, num_hashes: int = 16) -> DataFrame:
-    """MinHash via Kirsch-Mitzenmacher double hashing: ONE md5 per shingle
-    yields two 32-bit ints (a, b); hash family h_k = (a + k·b) mod 2^32.
-    Same uniformity guarantees for minhash, 1/16th the hashing cost of the
-    per-k md5 family. Numeric mins, integer band keys.
-    """
-    h = F.md5(F.col("shingle"))
-    base = shingles.select(
-        "id",
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint").alias("h1"),
-        F.conv(F.substring(h, 9, 8), 16, 10).cast("bigint").alias("h2"),
-    )
-    aggs = [
-        F.min((F.col("h1") + k * F.col("h2")) % F.lit(4294967296)).alias(f"h{k}")
-        for k in range(num_hashes)
-    ]
-    return base.groupBy("id").agg(*aggs)
-
-
 def minhash_signature_pandas(
     arrays: DataFrame, num_hashes: int = 16, extra_cols: tuple[str, ...] = ()
 ) -> DataFrame:
     """MinHash signature computed map-side from per-doc shingle arrays via
-    an Arrow-batched pandas UDF — Kirsch-Mitzenmacher double hashing, SAME
-    hash family as minhash_signature_km (one md5 per shingle → two
-    big-endian 32-bit ints a,b; h_k = (a + k·b) mod 2^32), verified
-    bit-identical, so the cross-engine oracle is unchanged.
+    an Arrow-batched pandas UDF — Kirsch-Mitzenmacher double hashing: one
+    md5 per shingle → two big-endian 32-bit ints a,b; h_k = (a + k·b) mod
+    2^32. The DuckDB oracles rebuild the same signature as a groupBy of
+    min() aggregates (``_sqlgen.minhash_km_select``).
 
-    Zero shuffles: the signature exists before any exchange (the groupBy
-    shuffle of the _km variant disappears), and the per-batch numpy min is
-    vectorized instead of per-row aggregate buffers. At scale the only
+    Zero shuffles: the signature exists before any exchange (the oracle's
+    groupBy shuffle has no Spark counterpart), and the per-batch numpy min
+    is vectorized instead of per-row aggregate buffers. At scale the only
     shuffled data downstream is (id, 16 ints).
     """
     from pyspark.sql.functions import pandas_udf
@@ -558,20 +289,6 @@ def minhash_signature_pandas(
     return sig.select(
         "id", *extras, *[F.col("mh")[k].alias(f"h{k}") for k in range(num_hashes)]
     )
-
-
-def minhash_signature(shingles: DataFrame, num_hashes: int = 16) -> DataFrame:
-    """MinHash signature: h_k = min(md5(k || ':' || shingle)) per doc.
-
-    Lexicographic min over lowercase hex == uniform min-hash; one groupBy
-    with ``num_hashes`` partial-aggregating min() columns (map-side combine,
-    single shuffle keyed by doc id).
-    """
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{k}:"), F.col("shingle")))).alias(f"h{k}")
-        for k in range(num_hashes)
-    ]
-    return shingles.groupBy("id").agg(*aggs)
 
 
 def lsh_candidate_pairs(
@@ -604,16 +321,7 @@ def lsh_candidate_pairs(
     broadcast hint — AQE broadcasts it when it is as tiny as it almost
     always is. Returns distinct (id_a, id_b), id_a < id_b.
     """
-    band_cols = []
-    for j in range(bands):
-        rows = [
-            F.col(f"h{j * rows_per_band + r}").alias(f"k{r}")
-            for r in range(rows_per_band)
-        ]
-        band_cols.append(F.struct(F.lit(j).alias("band_id"), *rows))
-    banded = signatures.select("id", F.explode(F.array(*band_cols)).alias("b")).select(
-        "id", "b.*"
-    )
+    banded = band_rows(signatures, bands, rows_per_band)
     if max_bucket is not None:
         keys = ["band_id"] + [f"k{r}" for r in range(rows_per_band)]
         hot = (
@@ -637,52 +345,8 @@ def lsh_candidate_pairs(
     )
 
 
-def simhash_signature_arrays(arrays: DataFrame, bits: int = 32) -> DataFrame:
-    """SimHash computed map-side from per-doc shingle arrays: md5 each
-    shingle once, then per-bit parity votes via array aggregates — zero
-    shuffles (the ``hs`` projection stays a separate plan node, so the 32
-    bit-aggregates share one md5 pass; CollapseProject keeps multi-use
-    non-cheap aliases un-inlined)."""
-    hashed = arrays.select(
-        "id", F.transform(F.col("shingles"), lambda s: F.md5(s)).alias("hs")
-    )
-    bit_cols = []
-    for b in range(1, bits + 1):
-        vote = F.aggregate(
-            F.col("hs"),
-            F.lit(0),
-            lambda acc, h: acc + (2 * (F.ascii(F.substring(h, b, 1)) % 2) - 1),
-        )
-        bit_cols.append(F.when(vote >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return hashed.select("id", F.concat(*bit_cols).alias("sig"))
-
-
-def simhash_signature(shingles: DataFrame, bits: int = 32) -> DataFrame:
-    """SimHash over shingle features: bit b set iff the majority of the
-    doc's (distinct) shingles has odd ascii(md5(shingle)[b]).
-
-    Shingle features (vs raw words) keep signatures discriminative even on
-    a small shared vocabulary — the Manku et al. web-dedup setup. One
-    groupBy with ``bits`` sum columns; the signature is a '0'/'1' string so
-    downstream hamming is pure substring comparison (engine-portable).
-    """
-    h = F.md5(F.col("shingle"))
-    sums = [
-        F.sum(2 * (F.ascii(F.substring(h, b, 1)) % 2) - 1).alias(f"s{b}")
-        for b in range(1, bits + 1)
-    ]
-    agg = shingles.groupBy("id").agg(*sums)
-    sig = F.concat(
-        *[
-            F.when(F.col(f"s{b}") >= 0, F.lit("1")).otherwise(F.lit("0"))
-            for b in range(1, bits + 1)
-        ]
-    )
-    return agg.select("id", sig.alias("sig"))
-
-
 def connected_components(
-    pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b", max_iter: int = 20
+    pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b"
 ) -> DataFrame:
     """Connected components over near-duplicate pairs -> (id, component)
     where component = min id reachable (the canonical doc of the cluster).
@@ -692,16 +356,17 @@ def connected_components(
     O(cluster diameter) iterations — near-dup clusters are shallow (dup
     pairs chain through shared content), so a handful of rounds suffice.
     Each round is two shuffles (join + groupBy); labels are checkpointed
-    per round to keep lineage flat. For web-scale graphs with deep
-    components swap in large-star/small-star (same API).
+    per round to keep lineage flat. The loop runs until no label changes,
+    so a deep cluster costs rounds, never a wrong answer.
 
     Convergence check (r9-opt): labels can only DECREASE
-    (new = least(old, min neighbor)), so SUM(comp) strictly decreases iff
-    ANY label changed — an exact-decimal scalar aggregate replaces the
-    old per-round labels-x-labels equality join, and evaluating it on the
-    round's lazy localCheckpoint makes ONE job both materialize the new
-    labels and test convergence (was: a checkpoint job + a join-count
-    job per round — 2 jobs and one node-scale join more, every round).
+    (new = least(old, min neighbor)), so the loop terminates, and SUM(comp)
+    strictly decreases iff ANY label changed — an exact-decimal scalar
+    aggregate replaces the old per-round labels-x-labels equality join,
+    and evaluating it on the round's lazy localCheckpoint makes ONE job
+    both materialize the new labels and test convergence (was: a
+    checkpoint job + a join-count job per round — 2 jobs and one
+    node-scale join more, every round).
     """
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
@@ -719,7 +384,7 @@ def connected_components(
     # realistic node count — float would break the equality test
     _sig = F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
     prev_sig = labels.agg(_sig).first()[0]
-    for _ in range(max_iter):
+    while True:
         neighbor_min = (
             edges.join(labels, edges.dst == labels.id)
             .groupBy("src")
@@ -738,24 +403,24 @@ def connected_components(
         sig = new_labels.agg(_sig).first()[0]  # materializes the checkpoint
         labels = new_labels
         if sig == prev_sig:
-            break
+            return labels
         prev_sig = sig
-    return labels
 
 
 def simhash_signature_int_pandas(arrays: DataFrame, bits: int = 32) -> DataFrame:
     """SimHash BIGINT signature computed map-side from per-doc shingle
-    arrays via an Arrow-batched pandas UDF — bit-identical to
-    simhash_signature_int (bit b, MSB-first, set iff the majority of the
-    doc's shingles votes odd on md5 hex digit b), verified equal, so the
-    cross-engine oracle is unchanged.
+    arrays via an Arrow-batched pandas UDF: bit b (MSB-first) is set iff
+    the majority of the doc's shingles votes odd on md5 hex digit b. The
+    DuckDB oracles rebuild the same signature as a ``bits``-column groupBy
+    (``_sqlgen.simhash_base_int`` / ``simhash_sum_cols_int`` /
+    ``simhash_sig_int_expr``).
 
     Collapses shingle-explode + md5/conv parse + the ``bits``-column
     groupBy into ONE zero-shuffle vectorized pass (measured 3.3s → 0.5s at
-    sf0.1; the groupBy with 32 aggregate buffers was the local cost the
-    r1 verdict flagged). The nibble-parity extraction is numpy over the
-    raw digest bytes: hex digit 2i is the high nibble of byte i, 2i+1 the
-    low nibble; digit parity = nibble LSB.
+    sf0.1 against the Spark groupBy form of the oracle's shape). The
+    nibble-parity extraction is numpy over the raw digest bytes: hex digit
+    2i is the high nibble of byte i, 2i+1 the low nibble; digit parity =
+    nibble LSB.
     """
     if bits != 32:
         raise ValueError("pandas simhash kernel packs 32-bit signatures")
@@ -783,6 +448,27 @@ def simhash_signature_int_pandas(arrays: DataFrame, bits: int = 32) -> DataFrame
     return arrays.select("id", _sim(F.col("shingles")).alias("sig"))
 
 
+def simhash_band_rows(signatures: DataFrame, bits: int, bands: int) -> DataFrame:
+    """Explode a BIGINT simhash signature table into band rows (id, sig,
+    band_id, band_key): band j is the j-th ``bits // bands``-bit slice,
+    MSB-first, by shift+mask. The signature rides along so a band join can
+    verify hamming inline. Map-side only."""
+    width = bits // bands
+    mask = (1 << width) - 1
+    band_structs = [
+        F.struct(
+            F.lit(j).alias("band_id"),
+            F.shiftright(F.col("sig"), (bands - 1 - j) * width)
+            .bitwiseAND(F.lit(mask))
+            .alias("band_key"),
+        )
+        for j in range(bands)
+    ]
+    return signatures.select(
+        "id", "sig", F.explode(F.array(*band_structs)).alias("b")
+    ).select("id", "sig", "b.band_id", "b.band_key")
+
+
 def simhash_pairs_onepass(
     signatures: DataFrame,
     bits: int,
@@ -794,8 +480,8 @@ def simhash_pairs_onepass(
     the signature rides along with its band rows, so hamming verification
     (bit_count(xor)) happens inline in the band equi-join — no re-join
     against the signature table, no checkpoint needed (single consumer).
-    Manku pigeonhole exactness as in banded_hamming_pairs_int (d < bands ⇒
-    a qualifying pair agrees on a full band).
+    Manku pigeonhole exactness: d < bands ⇒ a qualifying pair agrees on a
+    full band, so the banded candidate set misses no pair.
 
     Scale: the shuffle key is (band_id, band_key); carrying the 8-byte sig
     per band row is 4×8 bytes/doc — negligible against re-shuffling the
@@ -810,20 +496,7 @@ def simhash_pairs_onepass(
     """
     if max_distance >= bands:
         raise ValueError("exactness requires max_distance < bands")
-    width = bits // bands
-    mask = (1 << width) - 1
-    band_structs = [
-        F.struct(
-            F.lit(j).alias("band_id"),
-            F.shiftright(F.col("sig"), (bands - 1 - j) * width)
-            .bitwiseAND(F.lit(mask))
-            .alias("band_key"),
-        )
-        for j in range(bands)
-    ]
-    banded = signatures.select(
-        "id", "sig", F.explode(F.array(*band_structs)).alias("b")
-    ).select("id", "sig", "b.band_id", "b.band_key")
+    banded = simhash_band_rows(signatures, bits, bands)
     if max_bucket is not None:
         hot = (
             banded.groupBy("band_id", "band_key")
@@ -849,267 +522,6 @@ def simhash_pairs_onepass(
         )
         .filter(F.col("hamming") <= max_distance)
         .distinct()
-    )
-
-
-def connected_components_star(
-    pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b", max_iter: int = 50
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) -> (id, comp) with comp = min id of the component. Same API
-    and output as connected_components (min-label propagation); swap in
-    for graphs with DEEP components: convergence is O(log² n) rounds in
-    the worst case instead of O(diameter), and each round's shuffle is
-    keyed on node id with per-node fan-in (no frontier growth).
-
-    large-star: every neighbor v > u re-links to min(Γ(u) ∪ {u});
-    small-star: every neighbor v <= u re-links to that minimum. The edge
-    set converges to stars centered at component minima.
-    """
-    edges = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        edges.select(F.col("u").alias("id"))
-        .union(edges.select(F.col("v").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def fingerprint(e: DataFrame) -> tuple[int, int]:
-        row = e.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-        ).first()
-        return row.n, row.h
-
-    def canon(e: DataFrame) -> DataFrame:
-        # unordered pair -> (u, v) with u > v, no self loops, distinct
-        return (
-            e.select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    edges = canon(edges).localCheckpoint()
-    prev_fp = fingerprint(edges)
-    for _ in range(max_iter):
-        sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        # large-star
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mv"))
-            .select("u", F.least("u", "mv").alias("m"))
-        )
-        large = (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        kept = sym.filter(F.col("v") <= F.col("u"))
-        edges = canon(large.union(kept)).localCheckpoint()
-        # small-star
-        sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        smallnb = sym.filter(F.col("v") <= F.col("u"))
-        mins2 = smallnb.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            smallnb.join(mins2, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins2.select(F.col("u").alias("u"), F.col("m").alias("v")))
-        )
-        kept2 = sym.filter(F.col("v") > F.col("u")).select(
-            F.col("v").alias("u"), F.col("u").alias("v")
-        )
-        edges = canon(small.union(kept2)).localCheckpoint()
-        fp = fingerprint(edges)
-        if fp == prev_fp:
-            break
-        prev_fp = fp
-    # converged stars: every non-center node u links to its center v=min
-    centers = edges.groupBy("u").agg(F.min("v").alias("comp")).select(
-        F.col("u").alias("id"), "comp"
-    )
-    return (
-        nodes.join(centers, "id", "left")
-        .select("id", F.coalesce(F.col("comp"), F.col("id")).alias("comp"))
-    )
-
-
-def simhash_signature_int(shingles: DataFrame, bits: int = 32) -> DataFrame:
-    """SimHash as a BIGINT signature: bit b (MSB-first) set iff the majority
-    of the doc's shingles votes odd on md5 hex digit b. Integer signatures
-    make banding a shift+mask and hamming a single bit_count(xor) — no
-    string slicing anywhere in the verify path.
-
-    Vote extraction parses the md5 hex into 8-digit ints once, then reads
-    each digit's parity as the LSB of its nibble (shift+and) — integer ops
-    instead of per-digit substring/ascii."""
-    h = F.md5(F.col("shingle"))
-    n_words = (bits + 7) // 8
-    base = shingles.select(
-        "id",
-        *[
-            F.conv(F.substring(h, 8 * g + 1, 8), 16, 10).cast("bigint").alias(f"w{g}")
-            for g in range(n_words)
-        ],
-    )
-    sums = []
-    for b in range(1, bits + 1):
-        g = (b - 1) // 8
-        off = 4 * (7 - ((b - 1) % 8))  # nibble offset inside the 32-bit word
-        parity = F.shiftright(F.col(f"w{g}"), off).bitwiseAND(F.lit(1))
-        sums.append(F.sum(2 * parity - 1).alias(f"s{b}"))
-    agg = base.groupBy("id").agg(*sums)
-    sig = functools.reduce(
-        pyop.add,
-        [
-            F.when(F.col(f"s{b}") >= 0, F.lit(1 << (bits - b))).otherwise(F.lit(0))
-            for b in range(1, bits + 1)
-        ],
-    )
-    return agg.select("id", sig.cast("bigint").alias("sig"))
-
-
-def banded_hamming_pairs_int(
-    signatures: DataFrame, bits: int, bands: int, max_distance: int
-) -> DataFrame:
-    """EXACT hamming-<=d pairs over BIGINT signatures (Manku pigeonhole:
-    d < bands ⇒ a qualifying pair agrees on a full band). Band keys are
-    shift+mask; verify is bit_count(sig_a XOR sig_b) — all integer ops,
-    fully codegen'd."""
-    if max_distance >= bands:
-        raise ValueError("exactness requires max_distance < bands")
-    width = bits // bands
-    mask = (1 << width) - 1
-    band_structs = [
-        F.struct(
-            F.lit(j).alias("band_id"),
-            F.shiftright(F.col("sig"), (bands - 1 - j) * width).bitwiseAND(
-                F.lit(mask)
-            ).alias("band_key"),
-        )
-        for j in range(bands)
-    ]
-    banded = signatures.select(
-        "id", F.explode(F.array(*band_structs)).alias("b")
-    ).select("id", "b.band_id", "b.band_key")
-    x = banded.alias("x")
-    y = banded.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band_id") == F.col("y.band_id"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.id") < F.col("y.id")),
-        )
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .distinct()
-    )
-    sa = signatures.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = signatures.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    dist = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("int")
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            F.col("id_a").alias("doc_a"),
-            F.col("id_b").alias("doc_b"),
-            dist.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_distance)
-    )
-
-
-def _hamming_expr(bits: int) -> "F.Column":
-    return functools.reduce(
-        pyop.add,
-        [
-            (
-                F.substring(F.col("a.sig"), p, 1) != F.substring(F.col("b.sig"), p, 1)
-            ).cast("int")
-            for p in range(1, bits + 1)
-        ],
-    )
-
-
-def hamming_pairs(signatures: DataFrame, bits: int, max_distance: int) -> DataFrame:
-    """All-pairs hamming distance over bit-string signatures (small-corpus
-    verification kernel; prefer banded_hamming_pairs at scale)."""
-    a = signatures.alias("a")
-    b = signatures.alias("b")
-    dist = _hamming_expr(bits)
-    return (
-        a.join(b, F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("doc_a"),
-            F.col("b.id").alias("doc_b"),
-            dist.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_distance)
-    )
-
-
-def banded_hamming_pairs(
-    signatures: DataFrame, bits: int, bands: int, max_distance: int
-) -> DataFrame:
-    """EXACT hamming-<=d pairs via signature banding (Manku et al.):
-    with d < bands, pigeonhole guarantees every qualifying pair agrees on
-    at least one full band, so candidates = per-band equi-joins and the
-    cross join never happens. The verify step recomputes true hamming.
-
-    This is the 100 TB simhash path: the shuffle is keyed on (band, key).
-    """
-    if max_distance >= bands:
-        raise ValueError("exactness requires max_distance < bands")
-    width = bits // bands
-    band_structs = [
-        F.struct(
-            F.lit(j).alias("band_id"),
-            F.substring(F.col("sig"), j * width + 1, width).alias("band_key"),
-        )
-        for j in range(bands)
-    ]
-    banded = signatures.select(
-        "id", F.explode(F.array(*band_structs)).alias("b")
-    ).select("id", "b.band_id", "b.band_key")
-    x = banded.alias("x")
-    y = banded.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band_id") == F.col("y.band_id"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.id") < F.col("y.id")),
-        )
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .distinct()
-    )
-    sa = signatures.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = signatures.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    dist = functools.reduce(
-        pyop.add,
-        [
-            (F.substring(F.col("sig_a"), p, 1) != F.substring(F.col("sig_b"), p, 1)).cast(
-                "int"
-            )
-            for p in range(1, bits + 1)
-        ],
-    )
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            F.col("id_a").alias("doc_a"),
-            F.col("id_b").alias("doc_b"),
-            dist.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_distance)
     )
 
 

@@ -24,7 +24,8 @@ def shingle_cte(n: int = 3) -> str:
 
 def minhash_km_select(num_hashes: int) -> str:
     """Kirsch-Mitzenmacher signature: one md5 → two 32-bit ints → k derived
-    hashes (mirrors minhash_signature_km)."""
+    hashes (mirrors the pandas kernel
+    operators.dedup.minhash_signature_pandas)."""
     cols = ",\n             ".join(
         f"min((h1 + {k} * h2) % 4294967296) AS h{k}" for k in range(num_hashes)
     )
@@ -45,32 +46,9 @@ def band_int_exprs(bands: int, rows_per_band: int) -> list[str]:
     return out
 
 
-def minhash_select(num_hashes: int) -> str:
-    cols = ",\n             ".join(
-        f"min(md5('{k}:' || shingle)) AS h{k}" for k in range(num_hashes)
-    )
-    return f"SELECT doc_id, {cols} FROM sh GROUP BY doc_id"
-
-
-def band_exprs(bands: int, rows_per_band: int) -> list[str]:
-    out = []
-    for j in range(bands):
-        rows = " || '|' || ".join(
-            f"h{j * rows_per_band + r}" for r in range(rows_per_band)
-        )
-        out.append(f"SELECT doc_id, {j} AS band_id, md5({rows}) AS band_key FROM sig")
-    return out
-
-
-def simhash_sum_cols(bits: int, feature: str = "shingle") -> str:
-    return ",\n             ".join(
-        f"sum(2 * (ascii(substr(md5({feature}), {b}, 1)) % 2) - 1) AS s{b}"
-        for b in range(1, bits + 1)
-    )
-
-
 def simhash_base_int(bits: int, feature: str = "shingle") -> str:
-    """Parse md5 hex into 8-digit ints (mirrors simhash_signature_int)."""
+    """Parse md5 hex into 8-digit ints (mirrors the pandas kernel
+    operators.dedup.simhash_signature_int_pandas)."""
     n_words = (bits + 7) // 8
     cols = ", ".join(
         f"('0x' || substr(md5({feature}), {8 * g + 1}, 8))::BIGINT AS w{g}"
@@ -88,22 +66,9 @@ def simhash_sum_cols_int(bits: int) -> str:
     return ",\n             ".join(out)
 
 
-def simhash_band_selects(bits: int, bands: int) -> list[str]:
-    width = bits // bands
-    return [
-        f"SELECT doc_id, {j} AS band_id, substr(sig, {j * width + 1}, {width}) AS band_key FROM sigs"
-        for j in range(bands)
-    ]
-
-
-def simhash_sig_expr(bits: int) -> str:
-    return " || ".join(
-        f"(CASE WHEN s{b} >= 0 THEN '1' ELSE '0' END)" for b in range(1, bits + 1)
-    )
-
-
 def simhash_sig_int_expr(bits: int) -> str:
-    """BIGINT signature: MSB-first majority bits (mirrors simhash_signature_int)."""
+    """BIGINT signature: MSB-first majority bits (mirrors the pandas kernel
+    operators.dedup.simhash_signature_int_pandas)."""
     return " + ".join(
         f"(CASE WHEN s{b} >= 0 THEN CAST({1 << (bits - b)} AS BIGINT) ELSE 0 END)"
         for b in range(1, bits + 1)
@@ -117,10 +82,3 @@ def simhash_band_int_selects(bits: int, bands: int) -> list[str]:
         f"SELECT doc_id, {j} AS band_id, (sig >> {(bands - 1 - j) * width}) & {mask} AS band_key FROM sigs"
         for j in range(bands)
     ]
-
-
-def hamming_expr(bits: int, a: str = "a.sig", b: str = "b.sig") -> str:
-    return " + ".join(
-        f"(CASE WHEN substr({a}, {p}, 1) <> substr({b}, {p}, 1) THEN 1 ELSE 0 END)"
-        for p in range(1, bits + 1)
-    )

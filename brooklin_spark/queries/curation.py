@@ -681,13 +681,7 @@ def dedup_cluster_size_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from brooklin_spark.functions import text as X
 
     docs = table(spark, sf_dir, "documents")
-    sh = (
-        D.shingle_rows_pandas(docs, n=3)
-        .select("id", "n", F.xxhash64("shingle").alias("shingle"))
-        .localCheckpoint()  # see dedup_ngram_jaccard: UDF would run twice
-    )
-    pairs = D.jaccard_pairs_selfjoin(sh, threshold=0.7).select("doc_a", "doc_b")
-    comps = D.connected_components(pairs).select(
+    comps = D.near_dup_components(docs).select(
         F.col("id").alias("doc_id"), F.col("comp")
     )
     member = (

@@ -125,19 +125,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (id, n, shingle) rows (HOFs are interpreted — measured 3x; and the
     # array+size+explode composition double-evaluated the UDF per
     # consumer). Per-doc set size rides on every shingle row so the pair
-    # groupBy emits jaccard directly (no size-lookup joins). Shingles key
-    # by xxhash64 (codegen, 8-byte shuffle keys instead of 3-word strings;
-    # a 64-bit collision inside one doc pair is the accepted ~1e-10 risk,
-    # standard for shingle tables at scale).
+    # groupBy emits jaccard directly (no size-lookup joins).
     # No checkpoint: python subtrees never canonicalize equal, so each
     # self-join side runs the kernel once (2x total map work) — cheaper
     # than a localCheckpoint barrier, which serializes the whole shingle
     # table to disk before the join and is fault-tolerance-unsafe on a
     # real cluster.
-    sh = D.shingle_rows_pandas(docs, n=3).select(
-        "id", "n", F.xxhash64("shingle").alias("shingle")
-    )
-    return D.jaccard_pairs_selfjoin(sh, threshold=0.7)
+    return D.jaccard_pairs_selfjoin(D.hashed_shingle_rows(docs), threshold=0.7)
 
 
 # ---------------------------------------------------------------------------
@@ -253,14 +247,7 @@ _BITS, _SH_BANDS, _MAX_D = 32, 4, 3
     """,
 )
 def dedup_canonical_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents")
-    sh = (
-        D.shingle_rows_pandas(docs, n=3)
-        .select("id", "n", F.xxhash64("shingle").alias("shingle"))
-        .localCheckpoint()  # see dedup_ngram_jaccard: UDF would run twice
-    )
-    pairs = D.jaccard_pairs_selfjoin(sh, threshold=0.7).select("doc_a", "doc_b")
-    comps = D.connected_components(pairs)
+    comps = D.near_dup_components(table(spark, sf_dir, "documents"))
     return comps.select(
         F.col("id").alias("doc_id"),
         F.col("comp").alias("component"),
@@ -332,13 +319,7 @@ def dedup_canonical_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    sh = (
-        D.shingle_rows_pandas(docs, n=3)
-        .select("id", "n", F.xxhash64("shingle").alias("shingle"))
-        .localCheckpoint()  # UDF would run on both self-join sides otherwise
-    )
-    pairs = D.jaccard_pairs_selfjoin(sh, threshold=0.7).select("doc_a", "doc_b")
-    comps = D.connected_components(pairs).withColumnRenamed("id", "doc_id")
+    comps = D.near_dup_components(docs).withColumnRenamed("id", "doc_id")
     ck = F.coalesce(F.col("comp"), F.col("doc_id"))
     bucket = (
         F.ascii(
@@ -513,12 +494,7 @@ def dedup_decontamination_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    sh = (
-        D.shingle_rows_pandas(docs, n=3)
-        .select("id", "n", F.xxhash64("shingle").alias("shingle"))
-        .localCheckpoint()
-    )
-    truth = D.jaccard_pairs_selfjoin(sh, threshold=0.7).select("doc_a", "doc_b")
+    truth = D.near_dup_pairs(docs, 0.7).select("doc_a", "doc_b")
     arr = D.shingle_arrays_pandas(docs, n=3).localCheckpoint()
     sig = D.minhash_signature_pandas(arr, num_hashes=_MH).localCheckpoint()
     cand = D.lsh_candidate_pairs(
@@ -570,15 +546,9 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents")
-    sh = (
-        D.shingle_rows_pandas(docs, n=3)
-        .select("id", "n", F.xxhash64("shingle").alias("shingle"))
-        .localCheckpoint()
-    )
     # doc_a < doc_b: the near-dup pairs are already the census's
     # undirected (pa < pb) input
-    pairs = D.jaccard_pairs_selfjoin(sh, threshold=0.7).select(
+    pairs = D.near_dup_pairs(table(spark, sf_dir, "documents"), 0.7).select(
         F.col("doc_a").alias("pa"), F.col("doc_b").alias("pb")
     )
     return GR.triangle_census(pairs).select("n_triangles", "n_edges")
@@ -613,13 +583,7 @@ def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_pair_similarity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents")
-    sh = (
-        D.shingle_rows_pandas(docs, n=3)
-        .select("id", "n", F.xxhash64("shingle").alias("shingle"))
-        .localCheckpoint()
-    )
-    pairs = D.jaccard_pairs_selfjoin(sh, threshold=0.0)
+    pairs = D.near_dup_pairs(table(spark, sf_dir, "documents"), 0.0)
     bin_col = F.least(F.floor(F.col("jaccard") * 10), F.lit(9)).cast("int")
     return pairs.groupBy(bin_col.alias("bin")).agg(F.count("*").alias("n_pairs"))
 
@@ -670,13 +634,7 @@ def dedup_pair_similarity_histogram(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def dedup_apply_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    sh = (
-        D.shingle_rows_pandas(docs, n=3)
-        .select("id", "n", F.xxhash64("shingle").alias("shingle"))
-        .localCheckpoint()
-    )
-    pairs = D.jaccard_pairs_selfjoin(sh, threshold=0.7).select("doc_a", "doc_b")
-    comps = D.connected_components(pairs)
+    comps = D.near_dup_components(docs)
     drop_ids = comps.filter(F.col("comp") != F.col("id")).select(
         F.col("id").alias("doc_id")
     )
@@ -722,15 +680,8 @@ _CONTAIN_T = 0.8
     """,
 )
 def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     docs = table(spark, sf_dir, "documents")
-    sh = D.shingle_rows_pandas(docs, n=3).select(
-        "id", "n", F.xxhash64("shingle").alias("shingle")
-    )
-    capped = sh.withColumn(
-        "c", F.count("*").over(W.partitionBy("shingle"))
-    ).filter(F.col("c") <= D.MAX_POSTING).drop("c")
+    capped = D.capped_postings(D.hashed_shingle_rows(docs))
     a, b = capped.alias("a"), capped.alias("b")
     common = (
         a.join(
@@ -1358,13 +1309,7 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from brooklin_spark.functions import text as X
 
     docs = table(spark, sf_dir, "documents")
-    sh = (
-        D.shingle_rows_pandas(docs, n=3)
-        .select("id", "n", F.xxhash64("shingle").alias("shingle"))
-        .localCheckpoint()  # see dedup_ngram_jaccard: UDF would run twice
-    )
-    pairs = D.jaccard_pairs_selfjoin(sh, threshold=0.7).select("doc_a", "doc_b")
-    comps = D.connected_components(pairs).select(
+    comps = D.near_dup_components(docs).select(
         F.col("id").alias("doc_id"), F.col("comp").alias("component")
     )
     n_tok = X.token_count()
@@ -1535,9 +1480,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the only thing this switch is about — the sf100 run was 438-482 s
     # of collector pressure on an unchanged plan shape.
     spill = _fact_rows(spark, sf_dir, "documents") > _PF_SPILL_DOC_ROWS
-    sh_rows = D.shingle_rows_pandas(docs, n=3).select(
-        "id", "n", F.xxhash64("shingle").alias("shingle")
-    )
+    sh_rows = D.hashed_shingle_rows(docs)
     if spill:
         from brooklin_spark.checkpoint import gc_dead_scratch, scratch_name
 
@@ -2073,12 +2016,10 @@ _SWEEP_TH = [0.5, 0.6, 0.7, 0.8, 0.9]
 )
 def dedup_threshold_survivor_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    sh = D.shingle_rows_pandas(docs, n=3).select(
-        "id", "n", F.xxhash64("shingle").alias("shingle")
-    )
-    jac = D.jaccard_pairs_selfjoin(sh, threshold=_SWEEP_TH[0]).localCheckpoint(
-        eager=False
-    )  # pair-scale; the bucket histogram + per-doc max both re-read it
+    # pair-scale; the bucket histogram + per-doc max both re-read it
+    jac = D.jaccard_pairs_selfjoin(
+        D.hashed_shingle_rows(docs), threshold=_SWEEP_TH[0]
+    ).localCheckpoint(eager=False)
     # r9-opt (guide §2.3 — aggregate before you expand): the old sweep
     # BroadcastNestedLoopJoined the pair table against all 5 thresholds
     # (5x pair-scale rows) and ran a COUNT DISTINCT expand on that - 10x
@@ -2274,13 +2215,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    sh = (
-        D.shingle_rows_pandas(docs, n=3)
-        .select("id", "n", F.xxhash64("shingle").alias("shingle"))
-        .localCheckpoint()  # see dedup_ngram_jaccard: UDF would run twice
-    )
-    pairs = D.jaccard_pairs_selfjoin(sh, threshold=0.7).select("doc_a", "doc_b")
-    comps = D.connected_components(pairs)
+    comps = D.near_dup_components(docs)
     return (
         comps.join(docs, comps.id == docs.doc_id)
         .groupBy(F.col("comp").cast("bigint").alias("component"))

@@ -573,21 +573,9 @@ def _minhash_ingest_run(spark, split_dir, on_epoch_bytes=None) -> DataFrame:
         sess = batch_df.sparkSession
         arr = D.shingle_arrays_pandas(batch_df, n=3).filter(F.size("shingles") > 0)
         sig = D.minhash_signature_pandas(arr, num_hashes=_ING_MH)
-        band_cols = [
-            F.struct(
-                F.lit(j).alias("band_id"),
-                *[
-                    F.col(f"h{j * _ING_ROWS + r}").alias(f"k{r}")
-                    for r in range(_ING_ROWS)
-                ],
-            )
-            for j in range(_ING_BANDS)
-        ]
-        banded = (
-            sig.select("id", F.explode(F.array(*band_cols)).alias("b"))
-            .select("id", "b.*")
-            .localCheckpoint()  # feeds three consumers; tiny (id + 5 ints)
-        )
+        banded = D.band_rows(
+            sig, bands=_ING_BANDS, rows_per_band=_ING_ROWS
+        ).localCheckpoint()  # feeds three consumers; tiny (id + 5 ints)
         x, y = banded.alias("x"), banded.alias("y")
         key_eq = functools.reduce(
             pyop.and_, [F.col(f"x.{k}") == F.col(f"y.{k}") for k in keys]
@@ -698,27 +686,14 @@ def _simhash_ingest_run(spark, split_dir, on_epoch_bytes=None) -> DataFrame:
     store = os.path.join(work, "band_store")
     surv = os.path.join(work, "survivors")
     ckpt = os.path.join(work, "ckpt")
-    width = _ING_BITS // _ING_SH_BANDS
-    mask = (1 << width) - 1
 
     def step(batch_df: DataFrame, _epoch: int) -> None:
         sess = batch_df.sparkSession
         arr = D.shingle_arrays_pandas(batch_df, n=3).filter(F.size("shingles") > 0)
         sig = D.simhash_signature_int_pandas(arr, bits=_ING_BITS)
-        band_structs = [
-            F.struct(
-                F.lit(j).alias("band_id"),
-                F.shiftright(F.col("sig"), (_ING_SH_BANDS - 1 - j) * width)
-                .bitwiseAND(F.lit(mask))
-                .alias("band_key"),
-            )
-            for j in range(_ING_SH_BANDS)
-        ]
-        banded = (
-            sig.select("id", "sig", F.explode(F.array(*band_structs)).alias("b"))
-            .select("id", "sig", "b.band_id", "b.band_key")
-            .localCheckpoint()
-        )
+        banded = D.simhash_band_rows(
+            sig, bits=_ING_BITS, bands=_ING_SH_BANDS
+        ).localCheckpoint()
         x, y = banded.alias("x"), banded.alias("y")
         within_dist = F.bit_count(F.col("x.sig").bitwiseXOR(F.col("y.sig")))
         dropped = (

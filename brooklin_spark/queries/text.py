@@ -3307,10 +3307,9 @@ def text_ngram_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # zip_with over two SHIFTED SLICES (r9-opt): the old
                 # transform's element_at({t}, i + 2) re-evaluated the
                 # filter(split(text)) expression PER ELEMENT inside the
-                # interpreted lambda — O(tokens^2) work per document (the
-                # same trap shingle_arrays documents); the zip form
-                # evaluates the token array a constant number of times
-                # per ROW and pairs (t_i, t_i+1) in one linear pass.
+                # interpreted lambda — O(tokens^2) work per document; the
+                # zip form evaluates the token array a constant number of
+                # times per ROW and pairs (t_i, t_i+1) in one linear pass.
                 # Identical bigram structs, identical empty-doc behavior.
                 "zip_with(slice({t}, 1, greatest(size({t}) - 1, 0)), "
                 "slice({t}, 2, greatest(size({t}) - 1, 0)), "

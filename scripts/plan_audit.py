@@ -92,9 +92,9 @@ def main() -> None:
         "graph_triangle_census": "SortMergeJoin expected: degree joins and the wedge/closure joins are edge-scaled on both sides; out-degree after orientation is O(sqrt(E)) so no side is a hot-key risk",
         "self_join_candidate_generator_whitelist": {
             "detector": "equi-joins whose left/right key NAMES coincide plus a same-named `<` tie-break (the LSH/blocking candidate-pair shape — quadratic per key value); every query listed in with_self_join_candidate_generator must be justified here with the cap/band discipline that bounds it (r5 extension; the video-near-dup hot key was the motivating defect)",
-            "dedup_ngram_jaccard": "posting cap: shingles with df > MAX_POSTING dropped before the self-join (operators/dedup.py jaccard_pairs_selfjoin count-window cap; property-tested)",
+            "dedup_ngram_jaccard": "posting cap: shingles with df > MAX_POSTING dropped before the self-join (operators/dedup.py capped_postings count window, used by jaccard_pairs_selfjoin; property-tested)",
             "dedup_pair_similarity_histogram": "same jaccard_pairs_selfjoin posting cap as dedup_ngram_jaccard",
-            "dedup_containment_pairs": "same count-window MAX_POSTING cap inline in the query",
+            "dedup_containment_pairs": "same capped_postings count-window cap as dedup_ngram_jaccard",
             "dedup_keep_best_quality": "same jaccard_pairs_selfjoin posting cap as dedup_ngram_jaccard (pairs feed CC, then the per-cluster quality argmax)",
             "dedup_prefix_filter_jaccard": "prefix filtering IS the bound (PPJoin): only each doc's n - ceil(t*n) + 1 rarest-first tokens join, so hot tokens sort out of prefixes structurally; exact verify after — no recall-losing cap, equivalence with the capped pipeline property-tested",
             "dedup_minhash_lsh": "band discipline + r5 bucket cap: buckets larger than _LSH_MAX_BUCKET dropped (count window over the join's own shuffle key; giant-cluster unit test)",

@@ -4,15 +4,13 @@
   posting size results are IDENTICAL to uncapped; with a tiny cap the
   result is a SUBSET (hot shingles only ever remove pairs, never corrupt
   surviving ones).
-- large-star/small-star connected components == min-label propagation on
-  randomized graphs (chains, cliques, forests).
+- min-label propagation connected components == union-find on a graph
+  with a deep chain, a clique and a random sparse graph.
 """
 
 from __future__ import annotations
 
 import random
-
-import pytest
 
 from pyspark.sql import functions as F
 
@@ -50,66 +48,42 @@ def _labels(df):
     return {r.id: r.comp for r in df.collect()}
 
 
-@pytest.mark.parametrize(
-    "seed", [7, pytest.param(21, marks=pytest.mark.slow)]
-)
-def test_star_cc_matches_label_propagation_random(spark, seed):
-    rng = random.Random(seed)
+def _union_find_labels(edges):
+    """{node: min node of its component}, by plain-Python union-find."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_connected_components_matches_union_find(spark):
+    """Min-label propagation runs until no label changes, so a deep
+    component gets the same labels as union-find: a 30-node chain
+    (diameter 29, more rounds than any fixed small budget), a 6-clique and
+    a random sparse graph."""
+    rng = random.Random(7)
     edges = set()
-    # several components: a long chain (deep), a clique, random trees
-    base = 0
-    chain = [base + i for i in range(30)]
+    chain = list(range(30))
     edges |= {(a, b) for a, b in zip(chain, chain[1:])}
-    base = 100
-    clique = [base + i for i in range(6)]
+    clique = [100 + i for i in range(6)]
     edges |= {(a, b) for i, a in enumerate(clique) for b in clique[i + 1:]}
-    base = 200
     for _ in range(40):
-        a = base + rng.randrange(50)
-        b = base + rng.randrange(50)
+        a = 200 + rng.randrange(50)
+        b = 200 + rng.randrange(50)
         if a != b:
             edges.add((min(a, b), max(a, b)))
     df = spark.createDataFrame(sorted(edges), "doc_a bigint, doc_b bigint")
-    want = _labels(D.connected_components(df, max_iter=60))
-    got = _labels(D.connected_components_star(df))
-    assert got == want
-
-
-def test_star_cc_deep_chain_converges(spark):
-    """A 120-node chain: diameter 119 — label propagation needs many
-    rounds; the star algorithm must converge within its round budget and
-    agree."""
-    n = 120
-    df = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a bigint, doc_b bigint"
-    )
-    got = _labels(D.connected_components_star(df))
-    assert set(got) == set(range(n))
-    assert set(got.values()) == {0}
-
-
-@pytest.mark.slow
-def test_grouped_numpy_jaccard_matches_selfjoin(spark, sf_smoke):
-    """The posting-block numpy pair counter is exactly equivalent to the
-    windowed-cap self-join (same pairs, same jaccard values) — it is the
-    fat-posting alternative shape, so equivalence is its contract."""
-    from brooklin_spark.io import table
-    from brooklin_spark.operators import dedup as D
-    from pyspark.sql import functions as F
-
-    docs = table(spark, sf_smoke, "documents")
-    sh = D.shingle_rows_pandas(docs, n=3).select(
-        "id", "n", F.xxhash64("shingle").alias("shingle")
-    )
-    a = {
-        (r.doc_a, r.doc_b): round(r.jaccard, 9)
-        for r in D.jaccard_pairs_selfjoin(sh, 0.5).collect()
-    }
-    b = {
-        (r.doc_a, r.doc_b): round(r.jaccard, 9)
-        for r in D.jaccard_pairs_grouped_numpy(sh, 0.5).collect()
-    }
-    assert a == b and len(a) > 0
+    assert _labels(D.connected_components(df)) == _union_find_labels(edges)
 
 
 def test_blocked_pairs_match_guarded_kernel(spark, sf_smoke):

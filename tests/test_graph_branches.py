@@ -19,15 +19,12 @@ orders that hold it, so a doubled line must not double it.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
 import brooklin_spark.queries.dedup as dd
 from brooklin_spark import registry
+from tests.corpora import derived_corpus, empty
 from tests.oracle import compare, duck_connection
 
 registry.load_all()
@@ -71,31 +68,23 @@ def test_graph_branch_matches_oracle(spark, sf_correct, duck, monkeypatch, name,
     compare(df, duck, registry.ORACLES[name], name=name)
 
 
-def _derived_corpus(out, sf_smoke, rewrite) -> str:
-    """sf0.001 with orders and lineitem replaced by `rewrite(name, table)`."""
-    for name in os.listdir(sf_smoke):
-        shutil.copyfile(os.path.join(sf_smoke, name), str(out / name))
-    for name in ("orders", "lineitem"):
-        t = pq.read_table(os.path.join(sf_smoke, f"{name}.parquet"))
-        pq.write_table(rewrite(name, t), str(out / f"{name}.parquet"))
-    return str(out)
-
-
 @pytest.fixture(scope="module")
 def sf_empty(tmp_path_factory, sf_smoke):
     """sf0.001 with no orders and no lineitem: a graph with no edges."""
-    return _derived_corpus(
-        tmp_path_factory.mktemp("sf_empty"), sf_smoke, lambda _, t: t.slice(0, 0)
+    return derived_corpus(
+        tmp_path_factory.mktemp("sf_empty"),
+        sf_smoke,
+        {"orders": empty, "lineitem": empty},
     )
 
 
 @pytest.fixture(scope="module")
 def sf_dup_lines(tmp_path_factory, sf_smoke):
     """sf0.001 with every lineitem row written twice."""
-    return _derived_corpus(
+    return derived_corpus(
         tmp_path_factory.mktemp("sf_dup_lines"),
         sf_smoke,
-        lambda name, t: pa.concat_tables([t, t]) if name == "lineitem" else t,
+        {"lineitem": lambda t: pa.concat_tables([t, t])},
     )
 
 

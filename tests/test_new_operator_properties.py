@@ -584,13 +584,7 @@ def test_cluster_size_weights_mass_conservation(spark, sf_correct):
     from brooklin_spark.operators import dedup as D
 
     docs = tbl(spark, sf_correct, "documents")
-    sh = (
-        D.shingle_rows_pandas(docs, n=3)
-        .select("id", "n", F.xxhash64("shingle").alias("shingle"))
-        .localCheckpoint()
-    )
-    pairs = D.jaccard_pairs_selfjoin(sh, threshold=0.7).select("doc_a", "doc_b")
-    comps = D.connected_components(pairs).toPandas()
+    comps = D.near_dup_components(docs).toPandas()
     n_docs = docs.count()
     n_clusters = comps["comp"].nunique() + (n_docs - len(comps))
     assert abs(df["effective_docs"].sum() - n_clusters) < 1e-3

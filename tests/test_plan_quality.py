@@ -195,6 +195,19 @@ def test_jaccard_cap_rides_join_exchange(spark, sf_correct):
     assert shuffle_count(df) <= 4, plan
 
 
+def test_near_dup_pairs_run_the_shingler_once(spark, sf_correct):
+    """near_dup_pairs checkpoints the hashed shingle rows, so the pair
+    plan reads the checkpoint and holds no Python map node: the pandas
+    shingler ran once, inside the checkpoint, not once per self-join
+    side."""
+    from brooklin_spark.io import table
+    from brooklin_spark.operators import dedup as D
+
+    df = D.near_dup_pairs(table(spark, sf_correct, "documents"), 0.7)
+    plan = executed_plan(df)
+    assert "MapInPandas" not in plan, plan
+
+
 def test_simhash_onepass_single_join(spark, sf_correct):
     """SimHash banding carries the signature: exactly one self-join, no
     re-join against a signature table."""
