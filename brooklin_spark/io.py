@@ -1,17 +1,42 @@
-"""Table loading helpers for the analytics layer.
+"""Table loading helpers and the engine's one parquet reader.
 
 All testdata access funnels through here so scans stay column-prunable and
-filter-pushable: callers get the raw ``spark.read.parquet`` DataFrame (no
-caching, no collect) and Catalyst prunes columns/filters into the parquet
-scan per query. At 100 TB these would be partitioned/bucketed tables behind
-a catalog; the API shape is the same.
+filter-pushable: callers get a plain parquet scan DataFrame (no caching, no
+collect) and Catalyst prunes columns/filters into the parquet scan per
+query. At 100 TB these would be partitioned/bucketed tables behind a
+catalog; the API shape is the same.
+
+Every batch parquet read under ``brooklin_spark/`` goes through
+``read_parquet``. A read without a schema makes Spark launch one job only to
+read a footer (``parquet at ...``, ``mergeSchemasInParallel``), even with
+``mergeSchema=false``; at micro-batch scale that fixed per-job cost, not the
+data, is what a read costs. The contract:
+
+- An engine-owned store passes the schema it was written with (the
+  materialize state, the holding pen, the dead letters), so its read
+  launches no job at all.
+- Any other path is inferred once and memoized. The memo key is the
+  absolute path, the path's ``file_stamp`` and the session confs that
+  change what inference returns (``_INFER_CONFS``). One entry is kept per
+  path and replaced when its stamp changes, so a rewritten file or
+  directory is never served its old schema.
+- The memo holds schemas, never DataFrames: each call builds a fresh
+  reader, so two reads of one path get distinct attribute ids and a
+  self-join of them resolves.
+
+``cdc_schema_evolution_union`` reads with ``mergeSchema=true`` on purpose
+(schema evolution is the point of that query) and is the one batch parquet
+read that bypasses this module (``tests/test_reachability.py`` holds the
+allow-list).
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -25,6 +50,77 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+
+#: session confs that change the schema parquet inference returns
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: absolute path -> ((stamp, conf values), inferred schema); one entry per path
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def file_stamp(path: str) -> tuple | None:
+    """Identity of a local file or directory as it is now: ``(ino,
+    mtime_ns, size)`` of the path and, for a directory, of each top-level
+    entry by name. Appending a part file or rewriting the path changes it;
+    a file added inside a partition directory changes it through that
+    directory's mtime, so only once the kernel's coarse clock has ticked
+    since the last change there. None when the path cannot be stat'ed
+    (missing, a glob, a URI, a catalog name)."""
+    try:
+        st = os.stat(path)
+        out = (st.st_ino, st.st_mtime_ns, st.st_size)
+        if stat.S_ISDIR(st.st_mode):
+            with os.scandir(path) as it:
+                entries = [(e.name, e.stat()) for e in it]
+            out += tuple(
+                sorted((n, e.st_ino, e.st_mtime_ns, e.st_size) for n, e in entries)
+            )
+    except OSError:
+        return None
+    return out
+
+
+def read_parquet(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """``spark.read.parquet(path)`` that runs no schema-inference job when
+    the schema is known: either passed by the caller (an engine-owned
+    store) or memoized from an earlier read of the same unchanged path
+    under the same inference confs (see the module docstring)."""
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    stamp = file_stamp(path)
+    if stamp is None:
+        # not a local path: Spark resolves it (and reports a missing one)
+        return spark.read.parquet(path)
+    full = os.path.abspath(path)
+    key = (stamp, tuple(spark.conf.get(c, None) for c in _INFER_CONFS))
+    hit = _SCHEMAS.get(full)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    # stamp taken before inference: a write racing the read can only make
+    # the next read miss, never serve a schema older than its stamp
+    df = spark.read.parquet(path)
+    _SCHEMAS[full] = (key, df.schema)
+    return df
+
+
+def parquet_rows(path: str) -> int:
+    """Row count of a parquet file or directory summed from the footers,
+    without a Spark job. Like Spark, skips ``_``- and ``.``-prefixed
+    entries (``_SUCCESS``, ``_temporary``, checksum files)."""
+    import pyarrow.dataset as pads
+
+    return sum(
+        frag.metadata.num_rows
+        for frag in pads.dataset(path, format="parquet").get_fragments()
+    )
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -47,7 +143,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return table(spark, fallback, name)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # ts is parquet TIMESTAMP(NANOS) read as long (see session.py conf);
         # truncate to micros — same conversion DuckDB applies natively.

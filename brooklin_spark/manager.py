@@ -26,6 +26,13 @@ commits only after all of its outputs (holding pen, dead letters,
 transport) succeed; otherwise it replays, and the transport may see the
 batch twice. Parquet destinations carry no ``_spark_metadata`` log, so a
 replayed epoch can add duplicate files.
+
+Declared stores: the holding pen and the dead-letter store are flat
+parquet appends of unserialized batch rows, so both hold
+``model.STORED_ENVELOPE_SCHEMA`` (the envelope, every column nullable) and
+are read with it declared — a resume flush or ``dead_letters()`` launches
+no schema-inference job — and ``diagnostics()`` counts dead letters from
+the parquet footers without a Spark job.
 """
 
 from __future__ import annotations
@@ -39,7 +46,13 @@ from pyspark import InheritableThread
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from brooklin_spark.model import PipelineSpec, PipelineStatus, can_transition
+from brooklin_spark.io import parquet_rows, read_parquet
+from brooklin_spark.model import (
+    STORED_ENVELOPE_SCHEMA,
+    PipelineSpec,
+    PipelineStatus,
+    can_transition,
+)
 from brooklin_spark.sinks.registry import prepare_destination, write_batch
 from brooklin_spark.sources import build_source, commit_source
 
@@ -667,9 +680,8 @@ class PipelineManager:
             self.workdir, "deadletter", spec.name
         )
 
-    def dead_letters(self, name: str):
-        """The skipped-record store as a DataFrame (None if empty) — the
-        queryable twin of the reference's skip counter."""
+    def _dead_letter_store(self, name: str) -> str | None:
+        """The pipeline's dead-letter dir, or None while it holds no rows."""
         try:
             dl = self._deadletter_dir(self.get(name))
         except KeyError:  # deleted pipeline: check the default location
@@ -678,7 +690,15 @@ class PipelineManager:
             f.endswith(".parquet") for f in os.listdir(dl)
         ):
             return None
-        return self.spark.read.parquet(dl)
+        return dl
+
+    def dead_letters(self, name: str):
+        """The skipped-record store as a DataFrame (None if empty) — the
+        queryable twin of the reference's skip counter."""
+        dl = self._dead_letter_store(name)
+        if dl is None:
+            return None
+        return read_parquet(self.spark, dl, STORED_ENVELOPE_SCHEMA)
 
     def _flush_holding(self, spec: PipelineSpec, still_paused: list[int]) -> None:
         """Deliver held rows for resumed partitions; keep the rest held."""
@@ -689,7 +709,7 @@ class PipelineManager:
             f.endswith(".parquet") for f in os.listdir(hd)
         ):
             return
-        held = self.spark.read.parquet(hd)
+        held = read_parquet(self.spark, hd, STORED_ENVELOPE_SCHEMA)
         deliver = held.filter(~F.col("partition").isin(still_paused)) if still_paused else held
         write_batch(deliver, spec, self.spark)
         if still_paused:
@@ -755,7 +775,9 @@ class PipelineManager:
                     "num_input_rows": prog.get("numInputRows") if prog else None,
                     "group": list(r.group) if r else [],
                     "dead_letters": (
-                        dl.count() if (dl := self.dead_letters(spec.name)) is not None else 0
+                        parquet_rows(dl)
+                        if (dl := self._dead_letter_store(spec.name)) is not None
+                        else 0
                     ),
                     # pausedSourcePartitions surface (manual + auto with
                     # resume-at, the /datastream diag payload analog)

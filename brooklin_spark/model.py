@@ -94,6 +94,14 @@ ENVELOPE_SCHEMA = T.StructType(
     ]
 )
 
+#: ENVELOPE_SCHEMA as a parquet store of envelope rows reads it back: Spark
+#: writes every column nullable. The holding pen and the dead letters hold
+#: unserialized batch rows, so their reads declare this instead of
+#: inferring it from a footer.
+STORED_ENVELOPE_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType) for f in ENVELOPE_SCHEMA.fields]
+)
+
 #: Source checkpoint identity, "partition-offset" (KafkaConnectorTask.java:152).
 CHECKPOINT_FORMAT = "{partition}-{offset}"
 

@@ -28,6 +28,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from brooklin_spark.io import read_parquet
+
 SPEC_FILE = "_bucket_spec.json"
 
 
@@ -86,7 +88,7 @@ def register_bucketed(
         )
     cols = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
-        for f in spark.read.parquet(location).schema.fields
+        for f in read_parquet(spark, location).schema.fields
     )
     sort_clause = f"SORTED BY ({key}) " if spec.get("sorted", True) else ""
     spark.sql(

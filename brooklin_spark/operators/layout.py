@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from brooklin_spark.io import read_parquet
+
 
 def write_date_partitioned(
     df: DataFrame,
@@ -36,7 +38,7 @@ def write_date_partitioned(
 
 
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def zvalue(x_bits: F.Column | str, y_bits: F.Column | str, bits: int = 8) -> F.Column:

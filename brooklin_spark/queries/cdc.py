@@ -578,6 +578,8 @@ def cdc_schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     o.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     ).write.mode("overwrite").parquet(f"{root}/gen=2")
+    # the one batch parquet read outside io.read_parquet: merging the two
+    # generations' footers IS the schema evolution this query exercises
     evolved = spark.read.option("mergeSchema", "true").parquet(
         f"{root}/gen=1", f"{root}/gen=2"
     )

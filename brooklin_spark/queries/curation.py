@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from brooklin_spark.io import table
+from brooklin_spark.io import read_parquet, table
 from brooklin_spark.operators import dedup as D
 from brooklin_spark.queries import _sqlgen as G
 from brooklin_spark.registry import query
@@ -244,9 +244,9 @@ def dedup_incremental_persisted_index(spark: SparkSession, sf_dir: str) -> DataF
     import os
 
     idx = _base_dedup_index(spark, sf_dir)
-    base_bands = spark.read.parquet(os.path.join(idx, "bands"))
-    base_arr = spark.read.parquet(os.path.join(idx, "arrays"))
-    base_fps = spark.read.parquet(os.path.join(idx, "fps"))
+    base_bands = read_parquet(spark, os.path.join(idx, "bands"))
+    base_arr = read_parquet(spark, os.path.join(idx, "arrays"))
+    base_fps = read_parquet(spark, os.path.join(idx, "fps"))
 
     new = _split_docs(table(spark, sf_dir, "documents")).filter("is_new")
     new_ids = new.select("doc_id")

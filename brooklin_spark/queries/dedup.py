@@ -13,7 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from brooklin_spark.checkpoint import checkpoint_partitioned, spill_bucketed
-from brooklin_spark.io import table
+from brooklin_spark.io import file_stamp, parquet_rows, table
 from brooklin_spark.operators import dedup as D
 from brooklin_spark.operators import graph as GR
 from brooklin_spark.queries import _sqlgen as G
@@ -866,28 +866,28 @@ def _node_side(df: DataFrame, n_nodes: int | None) -> DataFrame:
         return F.broadcast(df)
     return df
 
-#: per-corpus fact row counts for the spill switches — read ONCE from the
-#: parquet footers (metadata-only, no Spark job) instead of running a
-#: count() job inside the measured query path on every invocation
-_ROWCOUNT_CACHE: dict[tuple[str, str], int] = {}
+#: per-corpus fact row counts for the spill switches — read from the
+#: parquet footers (metadata-only, no Spark job) once per file stamp instead
+#: of running a count() job inside the measured query path on every
+#: invocation: (sf_dir, table) -> (io.file_stamp, rows), replaced when the
+#: table is rewritten in place
+_ROWCOUNT_CACHE: dict[tuple[str, str], tuple[tuple | None, int]] = {}
 
 
 def _fact_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
-    if (sf_dir, name) not in _ROWCOUNT_CACHE:
-        try:
-            import pyarrow.dataset as _pads
-
-            path = os.path.join(sf_dir, f"{name}.parquet")
-            n = sum(
-                frag.metadata.num_rows
-                for frag in _pads.dataset(path, format="parquet").get_fragments()
-            )
-        except Exception:
-            # non-filesystem layouts (the "bucketed:" scheme) fall back to
-            # a real count — paid once per corpus per process
-            n = table(spark, sf_dir, name).count()
-        _ROWCOUNT_CACHE[(sf_dir, name)] = n
-    return _ROWCOUNT_CACHE[(sf_dir, name)]
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    stamp = file_stamp(path)
+    hit = _ROWCOUNT_CACHE.get((sf_dir, name))
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    try:
+        n = parquet_rows(path)
+    except (OSError, ValueError):  # pyarrow raises ArrowInvalid, a ValueError
+        # non-filesystem layouts (the "bucketed:" scheme, stamp None) fall
+        # back to a real count — paid once per corpus per process
+        n = table(spark, sf_dir, name).count()
+    _ROWCOUNT_CACHE[(sf_dir, name)] = (stamp, n)
+    return n
 
 
 def _lineitem_rows(spark: SparkSession, sf_dir: str) -> int:

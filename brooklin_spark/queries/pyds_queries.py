@@ -13,6 +13,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from brooklin_spark.io import read_parquet
 from brooklin_spark.registry import query
 from brooklin_spark.sources import pyds
 from brooklin_spark.streaming.pipelines import run_to_completion
@@ -212,7 +213,7 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .load()
     )
-    dim = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    dim = read_parquet(spark, f"{sf_dir}/customer.parquet")
     enriched = s.join(F.broadcast(dim), s.o_custkey == dim.c_custkey)
     agg = enriched.groupBy("c_mktsegment").agg(
         F.count("*").alias("n_orders"),

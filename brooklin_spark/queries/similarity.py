@@ -10,7 +10,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from brooklin_spark.io import atomic_publish, table
+from brooklin_spark.io import atomic_publish, read_parquet, table
 from brooklin_spark.operators import similarity as S
 from brooklin_spark.queries import _sqlgen as G
 from brooklin_spark.registry import query
@@ -477,7 +477,7 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         _shutil.rmtree(tmp, ignore_errors=True)
         S.ivf_assign(emb, cent).write.mode("overwrite").parquet(tmp)
         atomic_publish(tmp, idx)
-    return spark.read.parquet(idx)
+    return read_parquet(spark, idx)
 
 
 from brooklin_spark import registry as _registry
@@ -1736,7 +1736,7 @@ def _ivf_base_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         _shutil.rmtree(tmp, ignore_errors=True)
         S.ivf_assign(base, cent).write.mode("overwrite").parquet(tmp)
         atomic_publish(tmp, idx)
-    return spark.read.parquet(idx)
+    return read_parquet(spark, idx)
 
 
 @query("ann_ivf_index_refresh", oracle=_registry.ORACLES["ann_ivf_topk"])

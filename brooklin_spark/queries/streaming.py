@@ -22,7 +22,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from brooklin_spark.io import table
+from brooklin_spark.io import read_parquet, table
 
 from brooklin_spark.queries import _sqlgen as G
 from brooklin_spark.registry import query
@@ -562,7 +562,7 @@ def _minhash_ingest_run(spark, split_dir, on_epoch_bytes=None) -> DataFrame:
 
     from brooklin_spark.operators import dedup as D
 
-    schema = spark.read.parquet(split_dir).schema
+    schema = read_parquet(spark, split_dir).schema
     work = tempfile.mkdtemp(prefix="bspark_ingest_dedup_")
     store = os.path.join(work, "bucket_store")
     surv = os.path.join(work, "survivors")
@@ -585,7 +585,7 @@ def _minhash_ingest_run(spark, split_dir, on_epoch_bytes=None) -> DataFrame:
             .select(F.col("y.id").alias("doc_id"))
         )
         if _store_has_parquet(store):
-            st = sess.read.parquet(store)
+            st = read_parquet(sess, store)
             # every store bucket belongs to an earlier (smaller-id) doc,
             # so ANY hit blocks — no min-id bookkeeping needed
             hit = banded.join(st, keys, "left_semi").select(
@@ -622,7 +622,7 @@ def _minhash_ingest_run(spark, split_dir, on_epoch_bytes=None) -> DataFrame:
     try:
         q.processAllAvailable()
         out = (
-            spark.read.parquet(surv)
+            read_parquet(spark, surv)
             .select("doc_id", "source")
             .localCheckpoint(eager=True)
         )
@@ -681,7 +681,7 @@ def _simhash_ingest_run(spark, split_dir, on_epoch_bytes=None) -> DataFrame:
 
     from brooklin_spark.operators import dedup as D
 
-    schema = spark.read.parquet(split_dir).schema
+    schema = read_parquet(spark, split_dir).schema
     work = tempfile.mkdtemp(prefix="bspark_ingest_simhash_")
     store = os.path.join(work, "band_store")
     surv = os.path.join(work, "survivors")
@@ -707,7 +707,7 @@ def _simhash_ingest_run(spark, split_dir, on_epoch_bytes=None) -> DataFrame:
             .select(F.col("y.id").alias("doc_id"))
         )
         if _store_has_parquet(store):
-            st = sess.read.parquet(store).alias("s")
+            st = read_parquet(sess, store).alias("s")
             hit_dist = F.bit_count(F.col("s.sig").bitwiseXOR(F.col("x.sig")))
             hit = (
                 x.join(
@@ -746,7 +746,7 @@ def _simhash_ingest_run(spark, split_dir, on_epoch_bytes=None) -> DataFrame:
     try:
         q.processAllAvailable()
         out = (
-            spark.read.parquet(surv)
+            read_parquet(spark, surv)
             .select("doc_id", "source")
             .localCheckpoint(eager=True)
         )
@@ -796,7 +796,7 @@ def streaming_dedup_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFra
         emb.filter(F.col("vec_id") < k), "vec_id", "embedding"
     )
 
-    schema = spark.read.parquet(split_dir).schema
+    schema = read_parquet(spark, split_dir).schema
     work = tempfile.mkdtemp(prefix="bspark_ingest_semantic_")
     store = os.path.join(work, "ivf_store")
     out_dir = os.path.join(work, "manifest")
@@ -808,7 +808,7 @@ def streaming_dedup_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFra
         probe = assigned.withColumn("probe", F.lit(True))
         if _store_has_parquet(store):
             st = (
-                sess.read.parquet(store)
+                read_parquet(sess, store)
                 # prune history to the centroid buckets this batch touches
                 .join(assigned.select("cid").distinct(), "cid", "left_semi")
                 .select("id", "cid", "vec", F.lit(False).alias("probe"))
@@ -836,7 +836,7 @@ def streaming_dedup_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFra
     try:
         q.processAllAvailable()
         out = (
-            spark.read.parquet(out_dir)
+            read_parquet(spark, out_dir)
             .select("vec_id", "cid", "keep")
             .localCheckpoint(eager=True)
         )
@@ -965,7 +965,7 @@ def streaming_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     split_dir = _split_documents_for_stream(sf_dir)
-    schema = spark.read.parquet(split_dir).schema
+    schema = read_parquet(spark, split_dir).schema
     s = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -1029,7 +1029,7 @@ def streaming_bm25_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     split_dir = _split_documents_for_stream(sf_dir)
-    schema = spark.read.parquet(split_dir).schema
+    schema = read_parquet(spark, split_dir).schema
     work = tempfile.mkdtemp(prefix="bspark_bm25_ingest_")
     post_store = os.path.join(work, "postings")
     stats_store = os.path.join(work, "stats")
@@ -1066,11 +1066,11 @@ def streaming_bm25_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     try:
         q.processAllAvailable()
-        post = spark.read.parquet(post_store).filter(
+        post = read_parquet(spark, post_store).filter(
             F.col("term").isin(*_BM25_TERMS)
         )
         stats = (
-            spark.read.parquet(stats_store)
+            read_parquet(spark, stats_store)
             .agg(
                 F.sum("n_docs").cast("double").alias("n_docs"),
                 (
@@ -1132,7 +1132,7 @@ def streaming_count_min_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from brooklin_spark.queries.analytics import _CMS_K, _cms_grid, _cms_probe
 
     split = _split_table_for_stream(sf_dir, "events", "event_id")
-    schema = spark.read.parquet(split).schema
+    schema = read_parquet(spark, split).schema
     work = tempfile.mkdtemp(prefix="bspark_cms_ingest_")
     gstore = os.path.join(work, "grid")
     ustore = os.path.join(work, "users")
@@ -1157,12 +1157,12 @@ def streaming_count_min_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         q.processAllAvailable()
         grid = (
-            spark.read.parquet(gstore)
+            read_parquet(spark, gstore)
             .groupBy("j", "col")
             .agg(F.sum("cnt").alias("cnt"))
         )
         truth = (
-            spark.read.parquet(ustore)
+            read_parquet(spark, ustore)
             .groupBy("user_id")
             .agg(F.sum("c").alias("true_cnt"))
             .orderBy(F.desc("true_cnt"), "user_id")
@@ -1233,7 +1233,7 @@ def streaming_funnel_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the split inherits the source's TIMESTAMP(NANOS); Spark 4 refuses
     # nanos without this conf (io.table sets it for batch reads)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(split_dir).schema
+    schema = read_parquet(spark, split_dir).schema
     s = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from brooklin_spark.functions import text as X
-from brooklin_spark.io import atomic_publish, table
+from brooklin_spark.io import atomic_publish, read_parquet, table
 from brooklin_spark.operators.distrank import global_row_number
 from brooklin_spark.queries import _sqlgen as G
 from brooklin_spark.registry import query
@@ -2469,8 +2469,8 @@ def _bm25_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
             ],
         )
     return (
-        spark.read.parquet(_os.path.join(idx, "postings")),
-        spark.read.parquet(_os.path.join(idx, "stats")),
+        read_parquet(spark, _os.path.join(idx, "postings")),
+        read_parquet(spark, _os.path.join(idx, "stats")),
     )
 
 
@@ -2803,8 +2803,8 @@ def _bm25_base_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataF
             ],
         )
     return (
-        spark.read.parquet(_os.path.join(idx, "postings")),
-        spark.read.parquet(_os.path.join(idx, "stats")),
+        read_parquet(spark, _os.path.join(idx, "postings")),
+        read_parquet(spark, _os.path.join(idx, "stats")),
     )
 
 

@@ -16,17 +16,31 @@ expensive step is one shuffle of (key) to line up current state and the
 batch — here current-state ⋈ batch union + window; there, the MERGE join.
 Rewriting the full snapshot per batch is the standalone-parquet cost; table
 formats with file-level pruning replace it with touched-file rewrites.
+
+Each snapshot directory also holds ``_schema.json``, the schema it was
+written with (``merge_batch``'s projection: ``k`` string, ``value`` and
+``op_code`` as the batch carries them — binary and string for the envelope
+— and ``scn`` bigint). Every read declares it to ``io.read_parquet``, so a
+merge, reader view or time-travel read launches no footer-inference job.
+Spark's reader skips ``_``-prefixed files, so the sidecar is invisible to
+the scan.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from brooklin_spark.io import read_parquet
 
 _POINTER = "_CURRENT"
+#: per-snapshot sidecar holding the schema the snapshot was written with
+_SCHEMA_FILE = "_schema.json"
 
 
 def _state_root(spec) -> str:
@@ -53,7 +67,19 @@ def read_raw_state(spark, root: str) -> DataFrame | None:
     v = current_version(root)
     if v is None:
         return None
-    return spark.read.parquet(os.path.join(root, f"v{v}"))
+    return _read_snapshot(spark, root, v)
+
+
+def _read_snapshot(spark, root: str, version: int) -> DataFrame:
+    """One snapshot, read with the schema it was written with; a snapshot
+    published without the sidecar falls back to the inferring read."""
+    path = os.path.join(root, f"v{version}")
+    try:
+        with open(os.path.join(path, _SCHEMA_FILE)) as f:
+            schema = T.StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        schema = None
+    return read_parquet(spark, path, schema)
 
 
 def read_state(spark, root: str) -> DataFrame | None:
@@ -82,9 +108,7 @@ def read_state_at(spark, root: str, version: int) -> DataFrame:
     any table format."""
     if version not in versions(root):
         raise KeyError(f"version {version} not retained in {root}")
-    return spark.read.parquet(os.path.join(root, f"v{version}")).filter(
-        F.col("op_code") != "DELETE"
-    )
+    return _read_snapshot(spark, root, version).filter(F.col("op_code") != "DELETE")
 
 
 def vacuum(root: str, keep_last: int = 2) -> list[int]:
@@ -138,6 +162,10 @@ def _publish(new_state: DataFrame, root: str, keep_versions: int) -> int:
     v = (current_version(root) or 0) + 1
     out = os.path.join(root, f"v{v}")
     new_state.write.mode("overwrite").parquet(out)
+    # as parquet reads it back: every column nullable
+    schema = T.StructType([T.StructField(f.name, f.dataType) for f in new_state.schema])
+    with open(os.path.join(out, _SCHEMA_FILE), "w") as f:
+        f.write(schema.json())
     tmp = os.path.join(root, _POINTER + ".tmp")
     with open(tmp, "w") as f:
         f.write(str(v))

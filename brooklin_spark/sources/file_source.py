@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from brooklin_spark.io import read_parquet
 from brooklin_spark.model import PipelineSpec
 from brooklin_spark.sources.registry import source
 
@@ -78,12 +79,17 @@ def parquet_source(spark: SparkSession, spec: PipelineSpec) -> DataFrame:
     bounded-snapshot side path')."""
     path = spec.source_uri.removeprefix("parquet://")
     topic = spec.metadata.get("topic", spec.name)
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if set(df.columns) >= {"event_id", "ts", "user_id", "event_type", "props"}:
         from brooklin_spark.functions.envelope import events_to_envelope
 
-        if "ts" in df.columns and dict(df.dtypes)["ts"] == "bigint":
+        ts_type = dict(df.dtypes)["ts"]
+        if ts_type == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        elif ts_type == "timestamp_ntz":
+            # a zone-less parquet TIMESTAMP(MICROS) infers as timestamp_ntz;
+            # the envelope's event_ts is a timestamp (session zone is UTC)
+            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return events_to_envelope(df, topic=topic)
     # generic table: JSON-encode the row as the value payload
     return df.select(

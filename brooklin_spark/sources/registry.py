@@ -49,7 +49,8 @@ def commit_source(spec: PipelineSpec) -> None:
         fn(spec)
 
 
-def build_source(spark: SparkSession, spec: PipelineSpec) -> DataFrame:
+def load_sources() -> dict[str, SourceBuilder]:
+    """Import every connector module so ``SOURCES`` is complete."""
     from brooklin_spark.sources import (  # noqa: F401
         dirwatch,
         file_source,
@@ -58,6 +59,11 @@ def build_source(spark: SparkSession, spec: PipelineSpec) -> DataFrame:
         rate_source,
     )
 
+    return SOURCES
+
+
+def build_source(spark: SparkSession, spec: PipelineSpec) -> DataFrame:
+    load_sources()
     if spec.connector not in SOURCES:
         raise ValueError(f"no source builder for connector {spec.connector!r}")
     return SOURCES[spec.connector](spark, spec)

@@ -17,6 +17,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from brooklin_spark.io import read_parquet
+
+
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -37,13 +40,14 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     readStream needs an explicit schema, and the corpus has shipped ts as
     both TIMESTAMP(NANOS) (readable only as long under nanosAsLong, then
     ``div 1000``) and TIMESTAMP(MICROS) (a native timestamp — converting
-    again would shift 2024 to 1970). Probe the footer with a batch read —
-    metadata only, no data scan — and adapt, mirroring io.table()."""
+    again would shift 2024 to 1970). Probe the footer's schema through
+    io.read_parquet — memoized per file, so only the first call in a
+    process runs the inference job — and adapt, mirroring io.table()."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")  # see io.table
     import os
 
     path = os.path.join(sf_dir, "events.parquet")
-    ts_is_nanos_long = dict(spark.read.parquet(path).dtypes).get("ts") == "bigint"
+    ts_is_nanos_long = dict(read_parquet(spark, path).dtypes).get("ts") == "bigint"
     raw = (
         spark.readStream.schema(
             _events_schema(T.LongType() if ts_is_nanos_long else T.TimestampType())

@@ -6,6 +6,10 @@ case"; delete it, or wire it to a caller.
 A reference is a name, an attribute or an import of the def's name
 anywhere in those files, outside the def's own body. `MODULES` is the
 list of modules held to this rule.
+
+The same scan holds the library to one parquet reader: no batch
+`.read.parquet(` call under `brooklin_spark/` outside `io.py`, except the
+reads in `PARQUET_READ_ALLOWED`, each with its reason.
 """
 
 from __future__ import annotations
@@ -74,3 +78,60 @@ def unreferenced_defs(module: str) -> list[str]:
 def test_every_def_is_reached(module):
     dead = unreferenced_defs(module)
     assert not dead, f"{module}: no caller outside tests for {dead}"
+
+
+#: batch parquet reads allowed outside `io.py`: (file, enclosing top-level
+#: def) -> why it cannot go through `io.read_parquet`
+PARQUET_READ_ALLOWED = {
+    ("brooklin_spark/queries/cdc.py", "cdc_schema_evolution_union"): (
+        "reads with mergeSchema=true: merging the generations' footers is "
+        "the schema evolution the query exercises"
+    ),
+}
+
+
+def _is_batch_parquet_read(call: ast.Call) -> bool:
+    """`<x>.read.parquet(...)`, also with options or a schema in between
+    (`<x>.read.option(...).parquet(...)`); not `readStream` or `write`."""
+    if not (isinstance(call.func, ast.Attribute) and call.func.attr == "parquet"):
+        return False
+    node = call.func.value
+    while isinstance(node, (ast.Call, ast.Attribute)):
+        if isinstance(node, ast.Attribute) and node.attr == "read":
+            return True
+        node = node.func if isinstance(node, ast.Call) else node.value
+    return False
+
+
+def bare_parquet_reads(path: Path) -> list[tuple[str, int]]:
+    """(enclosing top-level def, line) of each batch parquet read in `path`."""
+    out = []
+    for top in ast.parse(path.read_text()).body:
+        owner = getattr(top, "name", "<module>")
+        for n in ast.walk(top):
+            if isinstance(n, ast.Call) and _is_batch_parquet_read(n):
+                out.append((owner, n.lineno))
+    return out
+
+
+def test_every_parquet_read_goes_through_the_one_reader():
+    """A batch parquet read outside `io.read_parquet` infers its schema
+    with a Spark job on every call; only the allow-listed reads may."""
+    found = []
+    for f in sorted((ROOT / "brooklin_spark").rglob("*.py")):
+        rel = f.relative_to(ROOT).as_posix()
+        if rel == "brooklin_spark/io.py":
+            continue
+        found += [
+            f"{rel}:{line} ({owner})"
+            for owner, line in bare_parquet_reads(f)
+            if (rel, owner) not in PARQUET_READ_ALLOWED
+        ]
+    assert not found, f"use io.read_parquet instead of spark.read.parquet: {found}"
+
+
+def test_the_allowed_parquet_reads_still_exist():
+    """An allow-list entry whose read is gone must be deleted with it."""
+    for (rel, owner), _why in PARQUET_READ_ALLOWED.items():
+        owners = {o for o, _ in bare_parquet_reads(ROOT / rel)}
+        assert owner in owners, f"{rel}: {owner} no longer reads parquet"
