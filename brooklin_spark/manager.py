@@ -27,6 +27,16 @@ transport) succeed; otherwise it replays, and the transport may see the
 batch twice. Parquet destinations carry no ``_spark_metadata`` log, so a
 replayed epoch can add duplicate files.
 
+Paused source partitions: a running pipeline's run record (``_Running``)
+holds the spec its batches read and a lock. ``_deliver`` holds the lock
+for a whole batch and reads ``system.paused.partitions`` once, at its
+start; a per-partition pause or resume changes the record's set, and a
+resume flushes the holding pen, under the same lock. So changes apply
+between micro-batches of the running query, which never restarts (the
+reference applies the set before its next poll, preConsumerPollHook,
+AbstractKafkaBasedConnectorTask.java:855-930): a batch uses one paused
+set from start to end, and a flush is serialized with batches.
+
 Declared stores: the holding pen and the dead-letter store are flat
 parquet appends of unserialized batch rows, so both hold
 ``model.STORED_ENVELOPE_SCHEMA`` (the envelope, every column nullable) and
@@ -40,6 +50,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
+from contextlib import nullcontext
 from dataclasses import dataclass, field
 
 from pyspark import InheritableThread
@@ -80,6 +92,9 @@ class _Running:
     query: StreamingQuery | None = None
     # pipelines deduped onto this one (task-sharing group members)
     group: list[str] = field(default_factory=list)
+    # held by _deliver for a whole batch and by every paused-set change
+    # and holding-pen flush, so the two never overlap
+    lock: threading.RLock = field(default_factory=threading.RLock)
 
 
 class PipelineManager:
@@ -268,9 +283,11 @@ class PipelineManager:
             nl_spec.metadata["system.holding.dir"] = self._holding_dir(spec)
             nl_spec.metadata["system.deadletter.dir"] = self._deadletter_dir(spec)
             self._persist(nl_spec)
-            self._running[new_leader] = _Running(
-                spec=nl_spec, query=r.query, group=r.group[1:]
-            )
+            # re-point the live record: the query's foreachBatch holds it,
+            # so its batches keep the lock and read the new leader's spec
+            with r.lock:
+                r.spec, r.group = nl_spec, r.group[1:]
+            self._running[new_leader] = r
             promoted = True
         elif r is None:
             # maybe a group MEMBER: drop it from its leader's group list so
@@ -433,29 +450,55 @@ class PipelineManager:
         Spark has no consumer.pause() primitive (SURVEY.md §2.4 risk
         register), and a bare row filter would lose data — the source
         checkpoint advances past filtered rows. Equivalent semantics are
-        rebuilt with a holding pen: the query restarts with a splitting
-        foreachBatch that delivers active-partition rows through the
-        transport and diverts paused-partition rows to a durable parquet
-        side channel; resume re-delivers held rows. Net effect matches the
-        reference: paused partitions stop flowing, nothing is lost, resume
-        catches up (at-least-once throughout).
+        rebuilt with a holding pen: the running query's foreachBatch
+        delivers active-partition rows through the transport and diverts
+        paused-partition rows to a durable parquet side channel; resume
+        re-delivers held rows. Net effect matches the reference: paused
+        partitions stop flowing, nothing is lost, resume catches up
+        (at-least-once throughout).
+
+        Like the reference, the call only changes the paused set: the spec
+        is persisted and, under the run record's lock, the set the live
+        query reads is replaced, so the next micro-batch applies it and
+        the query never restarts. A name without a run record of its own
+        (query not running, or a dedup-group member) only persists its
+        spec; the set takes effect at that name's next start. A group's
+        shared query applies the paused set of the spec its record holds,
+        the leader's. Concurrent calls on a running pipeline compose: each
+        reads, changes and persists the set under the record's lock.
         """
-        spec = self.get(name)
-        paused = set(self.paused_source_partitions(name)) | set(partitions)
-        spec.metadata["system.paused.partitions"] = json.dumps(sorted(paused))
-        self._persist(spec)
-        self._restart(spec)
+        self._set_paused(name, lambda paused: paused | set(partitions))
 
     def resume_source_partitions(self, name: str, partitions: list[int] | None = None) -> None:
-        """Clear some (or all) paused source partitions, re-deliver their
-        held rows through the transport, and restart the query."""
-        spec = self.get(name)
-        paused = set(self.paused_source_partitions(name))
-        paused = paused - set(partitions) if partitions is not None else set()
-        spec.metadata["system.paused.partitions"] = json.dumps(sorted(paused))
-        self._persist(spec)
-        self._flush_holding(spec, still_paused=sorted(paused))
-        self._restart(spec)
+        """Clear some (or all) paused source partitions and re-deliver
+        their held rows through the transport before returning. The flush
+        and the change of the live query's set run under the run record's
+        lock, so no batch runs between them (see
+        ``pause_source_partitions``)."""
+        self._set_paused(
+            name,
+            lambda paused: paused - set(partitions) if partitions is not None else set(),
+            flush=True,
+        )
+
+    def _set_paused(self, name: str, change, flush: bool = False) -> None:
+        """Replace ``name``'s paused set with ``change(current set)``: persist
+        the spec and hand the set to the name's run record, if it has one;
+        with ``flush``, first deliver the held rows of partitions no longer
+        paused. With a record, all of it runs under the record's lock, so
+        it lands between two batches of the live query."""
+        r = self._running.get(name)
+        with r.lock if r is not None else nullcontext():
+            spec = self.get(name)
+            current = json.loads(spec.metadata.get("system.paused.partitions", "[]"))
+            paused = sorted(change(set(current)))
+            value = json.dumps(paused)
+            spec.metadata["system.paused.partitions"] = value
+            self._persist(spec)
+            if flush:
+                self._flush_holding(spec, still_paused=paused)
+            if r is not None:
+                r.spec.metadata["system.paused.partitions"] = value
 
     def paused_source_partitions(self, name: str) -> list[int]:
         spec = self.get(name)
@@ -505,13 +548,17 @@ class PipelineManager:
         still = sorted(
             set(auto) | set(json.loads(spec.metadata.get("system.paused.partitions", "[]")))
         )
+        r = self._running.get(name)
         try:
             # Flush the pen for every currently-unpaused partition on EVERY
             # poll — not only when an auto-pause expired (ADVICE r2 #3):
             # with threshold > 1, sub-threshold transient send failures
             # divert rows to the pen without ever tripping an auto-pause,
-            # so the expired-only flush would strand them forever.
-            self._flush_holding(spec, still_paused=still)
+            # so the expired-only flush would strand them forever. The
+            # record's lock serializes the flush with batches (it is
+            # re-entered when a batch polls).
+            with r.lock if r is not None else nullcontext():
+                self._flush_holding(spec, still_paused=still)
         except Exception:
             # destination still failing: the held rows are untouched
             # (_flush_holding only prunes the pen AFTER a successful send),
@@ -529,57 +576,62 @@ class PipelineManager:
             self._set_auto_paused(name, auto)
         return expired
 
-    def _deliver(self, batch_df, spec: PipelineSpec) -> None:
+    def _deliver(self, batch_df, record: _Running) -> None:
         """The only send path: run per micro-batch by the query's
-        foreachBatch and once by a bounded bootstrap. A plain batch goes
-        straight to the transport (one job, no persist). Otherwise paused
-        rows go to the holding pen, rows failing the predicate to the
-        dead-letter store (skip-on-error, EventProducer.java:320-336) and
-        the rest to the transport, auto-pausing on send error. The side
-        appends run as concurrent jobs over the one persisted batch, each
-        on an InheritableThread so it keeps the query's job group
-        (query.stop() cancels it); all join before return and the first
-        failure is re-raised, so the epoch replays. Outputs configured into
-        one directory share one job: two writers must never commit into
-        the same directory at once."""
+        foreachBatch and once by a bounded bootstrap, holding the run
+        record's lock throughout and reading its spec (so its paused set)
+        once, at the start. A plain batch goes straight to the transport
+        (one job, no persist). Otherwise paused rows go to the holding pen,
+        rows failing the predicate to the dead-letter store (skip-on-error,
+        EventProducer.java:320-336) and the rest to the transport,
+        auto-pausing on send error. The side appends run as concurrent jobs
+        over the one persisted batch, each on an InheritableThread so it
+        keeps the query's job group (query.stop() cancels it); all join
+        before return and the first failure is re-raised, so the epoch
+        replays. Outputs configured into one directory share one job: two
+        writers must never commit into the same directory at once."""
         from pyspark.sql import functions as F
 
-        paused = [int(p) for p in json.loads(spec.metadata.get("system.paused.partitions", "[]"))]
-        pred = spec.metadata.get("system.deadletter.predicate")
-        auto = self._auto_pause_conf(spec)
-        if not (paused or pred or auto):
-            write_batch(batch_df, spec, self.spark)
-            return
-        hd, dl = self._holding_dir(spec), self._deadletter_dir(spec)
-        batch_df.persist()
-        errors: list[Exception] = []
-        threads = {}
-        try:
-            side = {}
-            rest = batch_df
-            if paused:
-                side[hd] = rest.filter(F.col("partition").isin(paused))
-                rest = rest.filter(~F.col("partition").isin(paused))
-            if pred:
-                bad = rest.filter(~F.expr(pred))
-                side[dl] = side[dl].unionByName(bad) if dl in side else bad
-                rest = rest.filter(F.expr(pred))
-            for path, frame in side.items():
-                threads[path] = _append_parquet_in_thread(frame, path, errors)
-            if auto:
-                # the auto-pause path appends to the holding pen too; its
-                # per-partition sends stay sequential
-                if hd in threads:
-                    threads[hd].join()
-                self._deliver_with_auto_pause(spec, rest, auto, hd)
-            else:
-                write_batch(rest, spec, self.spark)
-        finally:
-            for t in threads.values():
-                t.join()
-            batch_df.unpersist()
-        if errors:
-            raise errors[0]
+        with record.lock:
+            spec = record.spec
+            paused = [
+                int(p) for p in json.loads(spec.metadata.get("system.paused.partitions", "[]"))
+            ]
+            pred = spec.metadata.get("system.deadletter.predicate")
+            auto = self._auto_pause_conf(spec)
+            if not (paused or pred or auto):
+                write_batch(batch_df, spec, self.spark)
+                return
+            hd, dl = self._holding_dir(spec), self._deadletter_dir(spec)
+            batch_df.persist()
+            errors: list[Exception] = []
+            threads = {}
+            try:
+                side = {}
+                rest = batch_df
+                if paused:
+                    side[hd] = rest.filter(F.col("partition").isin(paused))
+                    rest = rest.filter(~F.col("partition").isin(paused))
+                if pred:
+                    bad = rest.filter(~F.expr(pred))
+                    side[dl] = side[dl].unionByName(bad) if dl in side else bad
+                    rest = rest.filter(F.expr(pred))
+                for path, frame in side.items():
+                    threads[path] = _append_parquet_in_thread(frame, path, errors)
+                if auto:
+                    # the auto-pause path appends to the holding pen too; its
+                    # per-partition sends stay sequential
+                    if hd in threads:
+                        threads[hd].join()
+                    self._deliver_with_auto_pause(spec, rest, auto, hd)
+                else:
+                    write_batch(rest, spec, self.spark)
+            finally:
+                for t in threads.values():
+                    t.join()
+                batch_df.unpersist()
+            if errors:
+                raise errors[0]
 
     def _deliver_with_auto_pause(
         self, spec: PipelineSpec, rest, conf: dict, hd: str
@@ -701,7 +753,11 @@ class PipelineManager:
         return read_parquet(self.spark, dl, STORED_ENVELOPE_SCHEMA)
 
     def _flush_holding(self, spec: PipelineSpec, still_paused: list[int]) -> None:
-        """Deliver held rows for resumed partitions; keep the rest held."""
+        """Deliver held rows for resumed partitions; keep the rest held.
+        The rows to deliver are counted from the pen's files without a
+        Spark job, so nothing is sent when none are held and a materialize
+        merge runs no empty-batch probe."""
+        import pyarrow.dataset as pads
         from pyspark.sql import functions as F
 
         hd = self._holding_dir(spec)
@@ -709,16 +765,25 @@ class PipelineManager:
             f.endswith(".parquet") for f in os.listdir(hd)
         ):
             return
-        held = read_parquet(self.spark, hd, STORED_ENVELOPE_SCHEMA)
-        deliver = held.filter(~F.col("partition").isin(still_paused)) if still_paused else held
-        write_batch(deliver, spec, self.spark)
-        if still_paused:
-            remain = held.filter(F.col("partition").isin(still_paused))
-            tmp = hd + ".tmp"
-            remain.write.mode("overwrite").parquet(tmp)
-            shutil.rmtree(hd)
-            os.replace(tmp, hd)
-        else:
+        # from the footers, or the partition column when some stay held
+        rows = (
+            pads.dataset(hd, format="parquet").count_rows(
+                filter=~pads.field("partition").isin(still_paused)
+            )
+            if still_paused
+            else parquet_rows(hd)
+        )
+        if rows:
+            held = read_parquet(self.spark, hd, STORED_ENVELOPE_SCHEMA)
+            deliver = held.filter(~F.col("partition").isin(still_paused)) if still_paused else held
+            write_batch(deliver, spec, self.spark, rows=rows)
+            if still_paused:
+                remain = held.filter(F.col("partition").isin(still_paused))
+                tmp = hd + ".tmp"
+                remain.write.mode("overwrite").parquet(tmp)
+                shutil.rmtree(hd)
+                os.replace(tmp, hd)
+        if not still_paused:
             shutil.rmtree(hd)
 
     def restore(self) -> int:
@@ -856,31 +921,44 @@ class PipelineManager:
             group = existing.group if existing is not None else []
         df = build_source(self.spark, spec)
         prepare_destination(df, spec, self.spark)
-        if df.isStreaming:
-            # data-path counters (EventProducer meter parity): one
-            # map-side aggregate riding the existing job, delivered per
-            # micro-batch to the MetricsStore via observedMetrics
-            from brooklin_spark.metrics import observe_counters
+        # registered before the query starts: its first batch already takes
+        # the lock, and a partition pause from here on changes this record
+        # (its spec is ``spec``), so the persist below keeps the new set
+        record = _Running(spec=spec, group=list(group))
+        self._running[spec.name] = record
+        try:
+            if df.isStreaming:
+                # data-path counters (EventProducer meter parity): one
+                # map-side aggregate riding the existing job, delivered per
+                # micro-batch to the MetricsStore via observedMetrics
+                from brooklin_spark.metrics import observe_counters
 
-            query = (
-                observe_counters(df)
-                .writeStream.foreachBatch(lambda batch_df, _epoch: self._deliver(batch_df, spec))
-                .option("checkpointLocation", self._ckpt_dir(spec))
-                .queryName(spec.name)
-                .start()
-            )
-        else:
-            # bounded bootstrap: the same delivery, then advance the
-            # connector's position post-send; auto-pause may have recorded
-            # paused partitions on disk, which the persist below must keep
-            self._deliver(df, spec)
-            commit_source(spec)
-            spec.metadata = self.get(spec.name).metadata
-            query = None
-        self._running[spec.name] = _Running(spec=spec, query=query, group=list(group))
-        if not already_ready:
-            self._transition(spec, PipelineStatus.READY)
-        self._persist(spec)
+                record.query = (
+                    observe_counters(df)
+                    .writeStream.foreachBatch(
+                        lambda batch_df, _epoch: self._deliver(batch_df, record)
+                    )
+                    .option("checkpointLocation", self._ckpt_dir(spec))
+                    .queryName(spec.name)
+                    .start()
+                )
+            else:
+                # bounded bootstrap: the same delivery, then advance the
+                # connector's position post-send; auto-pause may have recorded
+                # paused partitions on disk, which the persist below must keep
+                self._deliver(df, record)
+                commit_source(spec)
+                spec.metadata = self.get(spec.name).metadata
+        except BaseException:
+            if existing is not None:
+                self._running[spec.name] = existing
+            else:
+                self._running.pop(spec.name, None)
+            raise
+        with record.lock:
+            if not already_ready:
+                self._transition(spec, PipelineStatus.READY)
+            self._persist(spec)
 
     def _transition(self, spec: PipelineSpec, dst: PipelineStatus) -> None:
         if not can_transition(spec.status, dst):

@@ -127,12 +127,24 @@ def vacuum(root: str, keep_last: int = 2) -> list[int]:
 
 
 def merge_batch(
-    batch_df: DataFrame, root: str, spark=None, keep_versions: int = 2
+    batch_df: DataFrame,
+    root: str,
+    spark=None,
+    keep_versions: int = 2,
+    rows: int | None = None,
 ) -> None:
-    """Merge one envelope micro-batch into the state table."""
+    """Merge one envelope micro-batch into the state table.
+
+    An empty batch publishes nothing: a merge rewrites the whole state, and
+    a snapshot identical to the current one would only push a real version
+    out of time-travel retention. So a merge first probes the batch for a
+    row (one job), unless the caller passes ``rows``, the batch's row count
+    taken without a job (the holding-pen flush counts it from the parquet
+    footers); then the merge is only its write jobs.
+    """
     spark = spark or batch_df.sparkSession
-    if batch_df.isEmpty():
-        return  # don't rewrite the snapshot for an empty micro-batch
+    if batch_df.isEmpty() if rows is None else rows == 0:
+        return
     # keyless records (e.g. file lines) merge by content hash: re-delivered
     # duplicates collapse (at-least-once → effectively-once for keyless
     # streams), distinct payloads stay distinct rows

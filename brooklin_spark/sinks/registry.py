@@ -30,11 +30,19 @@ def _serde_applied(df: DataFrame, spec: PipelineSpec) -> DataFrame:
     return apply_serdes(df, spec)
 
 
-def write_batch(df: DataFrame, spec: PipelineSpec, spark=None) -> None:
+def write_batch(
+    df: DataFrame, spec: PipelineSpec, spark=None, rows: int | None = None
+) -> None:
     """Write a batch envelope frame through the spec's transport. ``spark``
     pins the session used for memory-table view registration when df comes
-    from a foreachBatch clone."""
-    WRITERS[spec.transport](_serde_applied(df, spec), spec, spark)
+    from a foreachBatch clone. ``rows`` is the frame's row count when the
+    caller has it without a job; a materialize merge then runs no
+    empty-batch probe (``merge_batch``)."""
+    df = _serde_applied(df, spec)
+    if spec.transport == "materialize":
+        _materialize(df, spec, spark, rows)
+    else:
+        WRITERS[spec.transport](df, spec, spark)
 
 
 def prepare_destination(df: DataFrame, spec: PipelineSpec, spark: SparkSession) -> None:
@@ -71,12 +79,14 @@ def _parquet_append(df: DataFrame, spec: PipelineSpec, spark=None) -> None:
     df.write.mode("append").partitionBy("topic").parquet(_parquet_path(spec))
 
 
-def _materialize(df: DataFrame, spec: PipelineSpec, spark=None) -> None:
+def _materialize(
+    df: DataFrame, spec: PipelineSpec, spark=None, rows: int | None = None
+) -> None:
     """CDC MERGE: apply op-codes to a keyed state table (see
     sinks/materialize.py)."""
     from brooklin_spark.sinks.materialize import _state_root, merge_batch
 
-    merge_batch(df, _state_root(spec), spark)
+    merge_batch(df, _state_root(spec), spark, rows=rows)
 
 
 # ---------------------------------------------------------------------------

@@ -114,7 +114,8 @@ def test_dedup_by_source_reuses_query(spark, workdir, tmp_path):
 def test_dedup_group_leader_delete_promotes_member(spark, workdir, tmp_path):
     """Deleting the group leader promotes a member: the shared physical
     query keeps running under the new leader, no member is orphaned with an
-    empty checkpoint (ADVICE r1 #5)."""
+    empty checkpoint (ADVICE r1 #5), and the query applies the new leader's
+    paused partitions."""
     src = str(tmp_path / "in")
     _write_lines(src + "/a.txt", ["v1"])
     mgr = PipelineManager(spark, workdir)
@@ -130,10 +131,19 @@ def test_dedup_group_leader_delete_promotes_member(spark, workdir, tmp_path):
     # the promoted query still consumes: new data flows to the shared dest
     _write_lines(src + "/b.txt", ["v2"])
     mgr.process_available("g2")
-    vals = sorted(
-        r.v for r in spark.sql("SELECT CAST(value AS STRING) v FROM g1").collect()
-    )
-    assert vals == ["v1", "v2"]
+
+    def vals() -> list[str]:
+        return sorted(r.v for r in spark.sql("SELECT CAST(value AS STRING) v FROM g1").collect())
+
+    assert vals() == ["v1", "v2"]
+    # the live query's run record now holds g2's spec: a partition paused
+    # on g2 holds its rows in the running query, and resuming delivers them
+    mgr.pause_source_partitions("g2", [4])
+    _land(src, _name_for_partition(src, 4), ["held"], str(tmp_path / "stage"))
+    mgr.process_available("g2")
+    assert vals() == ["v1", "v2"] and mgr.query_of("g2") is q
+    mgr.resume_source_partitions("g2")
+    assert vals() == ["held", "v1", "v2"]
     mgr.delete("g2")
     mgr.delete("g3")
 
@@ -279,13 +289,15 @@ def test_rate_source_produces(spark, workdir):
     mgr.delete("rate1")
 
 
-def _name_for_partition(src_dir: str, target: int, exclude: set[int] = frozenset()) -> str:
+def _name_for_partition(
+    src_dir: str, target: int, exclude: set[int] = frozenset(), stem: str = "gen"
+) -> str:
     """Find a filename whose file-source partition (crc32(uri) % 32) hits
     (or avoids) a target — mirrors file_source.py's routing expression."""
     import zlib
 
     for i in range(10_000):
-        name = f"gen{i}.txt"
+        name = f"{stem}{i}.txt"
         uri = f"file:{src_dir}/{name}"  # Spark reports file:/abs/path
         p = zlib.crc32(uri.encode()) % 32
         if (target is None or p == target) and p not in exclude:
@@ -296,16 +308,20 @@ def _name_for_partition(src_dir: str, target: int, exclude: set[int] = frozenset
 def test_pause_resume_source_partitions_holds_and_redelivers(spark, workdir, tmp_path):
     """Per-partition pause parity (DatastreamResources.java:604-682): paused
     partitions stop flowing to the destination, nothing is lost (holding
-    pen), resume re-delivers the held rows."""
+    pen), resume re-delivers the held rows, and the query keeps running
+    throughout (same run id)."""
     src = str(tmp_path / "in")
     _write_lines(src + "/a.txt", ["a1"])
     mgr = PipelineManager(spark, workdir)
     mgr.create(_file_spec("pp", src))
     mgr.process_available("pp")
     p_a = spark.sql("SELECT partition FROM pp").first().partition
+    run_id = mgr.query_of("pp").runId
 
     mgr.pause_source_partitions("pp", [p_a])
     assert mgr.paused_source_partitions("pp") == [p_a]
+    # applied between micro-batches of the running query: no restart
+    assert mgr.query_of("pp").runId == run_id
     held_name = _name_for_partition(src, p_a)
     live_name = _name_for_partition(src, None, exclude={p_a})
     _write_lines(f"{src}/{held_name}", ["held1"])
@@ -316,6 +332,7 @@ def test_pause_resume_source_partitions_holds_and_redelivers(spark, workdir, tmp
 
     mgr.resume_source_partitions("pp")
     assert mgr.paused_source_partitions("pp") == []
+    assert mgr.query_of("pp").runId == run_id
     mgr.process_available("pp")
     vals = sorted(r.v for r in spark.sql("SELECT CAST(value AS STRING) v FROM pp").collect())
     assert vals == ["a1", "held1", "live1"], vals  # re-delivered on resume
@@ -477,6 +494,172 @@ def test_parquet_destination_readable_after_resuming_a_created_paused_partition(
     mgr.process_available("pqresume")
     assert _values(spark.read.parquet(out)) == sorted(held + live + new)
     mgr.delete("pqresume")
+
+
+def _land(src: str, name: str, lines: list[str], stage: str) -> None:
+    """Write a source file under ``stage`` and rename it into ``src``, so
+    the file source never lists a half-written file."""
+    _write_lines(f"{stage}/{name}", lines)
+    os.rename(f"{stage}/{name}", f"{src}/{name}")
+
+
+def test_rows_landing_during_a_resume_flush_are_delivered(
+    spark, workdir, tmp_path, monkeypatch
+):
+    """A batch that starts while resume_source_partitions flushes the
+    holding pen waits for the flush and then reads the resumed set, so a
+    row landing on the partition in that window reaches the transport; it
+    is not appended to the pen the flush then deletes."""
+    import threading
+
+    from brooklin_spark import manager as manager_mod
+
+    src, stage = str(tmp_path / "in"), str(tmp_path / "stage")
+    _write_lines(src + "/a.txt", ["a1"])
+    mgr = PipelineManager(spark, workdir)
+    mgr.create(_file_spec("race", src))
+    mgr.process_available("race")
+    mgr.pause_source_partitions("race", [5])
+    _land(src, _name_for_partition(src, 5), ["h1"], stage)
+    mgr.process_available("race")
+
+    entered, done = threading.Event(), threading.Event()
+    deliver = mgr._deliver
+
+    def spy_deliver(*args):
+        entered.set()
+        try:
+            deliver(*args)
+        finally:
+            done.set()
+
+    monkeypatch.setattr(mgr, "_deliver", spy_deliver)
+    real_write = manager_mod.write_batch
+    late = _name_for_partition(src, 5, stem="late")
+
+    def flush_write(df, spec, *args, **kwargs):
+        if threading.current_thread() is threading.main_thread() and not entered.is_set():
+            # the flush: a file lands on the resuming partition and its
+            # batch starts before the held rows are sent; it waits for the
+            # flush to end
+            _land(src, late, ["late1"], stage)
+            assert entered.wait(60), "no batch started during the flush"
+            assert not done.wait(0.5), "a batch ran during the flush"
+        real_write(df, spec, *args, **kwargs)
+
+    monkeypatch.setattr(manager_mod, "write_batch", flush_write)
+    mgr.resume_source_partitions("race", [5])
+    mgr.process_available("race")
+    vals = sorted(r.v for r in spark.sql("SELECT CAST(value AS STRING) v FROM race").collect())
+    assert vals == ["a1", "h1", "late1"], vals
+    mgr.delete("race")
+
+
+def test_partition_pause_of_a_bounded_pipeline_keeps_its_rows(spark, workdir, tmp_path):
+    """Pausing and resuming a partition of a bounded (bootstrap) pipeline
+    changes only its paused set: the bootstrap does not run again, so the
+    destination still holds each row once."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "rows.parquet")
+    pq.write_table(pa.table({"id": list(range(10))}), path)
+    mgr = PipelineManager(spark, workdir)
+    mgr.create(
+        PipelineSpec(
+            name="bpause", connector="parquet", transport="memory",
+            source_uri=f"parquet://{path}", metadata={"memory.table": "bpause"},
+        )
+    )
+    assert spark.sql("SELECT count(*) n FROM bpause").first().n == 10
+    mgr.pause_source_partitions("bpause", [5])
+    assert spark.sql("SELECT count(*) n FROM bpause").first().n == 10
+    mgr.resume_source_partitions("bpause", [5])
+    assert spark.sql("SELECT count(*) n FROM bpause").first().n == 10
+    mgr.delete("bpause")
+
+
+def test_partition_pause_of_a_group_member_starts_no_query(spark, workdir, tmp_path):
+    """A dedup-group member has no query of its own: pausing one of its
+    partitions persists the member's paused set and starts nothing, so the
+    shared destination receives each row once. The shared query applies
+    the paused set of the spec its record holds, the leader's."""
+    src = str(tmp_path / "in")
+    _write_lines(src + "/a.txt", ["m1", "m2"])
+    mgr = PipelineManager(spark, workdir)
+    mgr.create(_file_spec("gl", src))
+    mgr.create(_file_spec("gm", src))
+    mgr.process_available("gl")
+    mgr.pause_source_partitions("gm", [7])
+    mgr.process_available("gm")  # drains a query of gm's own, if one started
+    _write_lines(src + "/b.txt", ["m3"])
+    mgr.process_available("gl")
+    assert [q.name for q in spark.streams.active if q.name in ("gl", "gm")] == ["gl"]
+    vals = sorted(r.v for r in spark.sql("SELECT CAST(value AS STRING) v FROM gl").collect())
+    assert vals == ["m1", "m2", "m3"], vals
+    assert mgr.paused_source_partitions("gm") == [7]
+    assert mgr.paused_source_partitions("gl") == []
+    mgr.delete("gm")
+    mgr.delete("gl")
+
+
+def test_concurrent_partition_pauses_both_apply(spark, workdir, tmp_path):
+    """The REST server is threaded: two pauses of one running pipeline at
+    once each read, change and persist the paused set under the run
+    record's lock, so both partitions end up paused, in the catalog and in
+    the set the live query reads."""
+    import json
+    import threading
+
+    src = str(tmp_path / "in")
+    _write_lines(src + "/a.txt", ["a1"])
+    mgr = PipelineManager(spark, workdir)
+    mgr.create(_file_spec("cp", src))
+    for _ in range(10):
+        mgr.resume_source_partitions("cp")
+        barrier = threading.Barrier(2)
+
+        def pause(p: int) -> None:
+            barrier.wait()
+            mgr.pause_source_partitions("cp", [p])
+
+        threads = [threading.Thread(target=pause, args=(p,)) for p in (1, 2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert mgr.paused_source_partitions("cp") == [1, 2]
+        live = mgr._running["cp"].spec.metadata["system.paused.partitions"]
+        assert json.loads(live) == [1, 2]
+    mgr.delete("cp")
+
+
+def test_batch_of_only_paused_rows_publishes_no_snapshot(spark, workdir, tmp_path):
+    """A batch whose rows all go to the holding pen leaves a materialized
+    state at its version: the empty rest of the batch publishes nothing,
+    so no real version leaves time-travel retention. The resume flush
+    then publishes the held rows."""
+    from brooklin_spark.sinks.materialize import current_version, read_state
+
+    src, root = str(tmp_path / "in"), str(tmp_path / "state")
+    _write_lines(src + "/a.txt", ["a1"])
+    mgr = PipelineManager(spark, workdir)
+    mgr.create(
+        PipelineSpec(
+            name="mz", connector="file", transport="materialize",
+            source_uri=f"file://{src}", dest_uri=f"parquet://{root}",
+        )
+    )
+    mgr.process_available("mz")
+    version = current_version(root)
+    mgr.pause_source_partitions("mz", [5])
+    _write_lines(f"{src}/{_name_for_partition(src, 5)}", ["h1"])
+    mgr.process_available("mz")
+    assert current_version(root) == version
+    mgr.resume_source_partitions("mz")
+    assert current_version(root) == version + 1
+    assert {bytes(r.value) for r in read_state(spark, root).collect()} == {b"a1", b"h1"}
+    mgr.delete("mz")
 
 
 def test_failed_side_write_fails_the_batch_and_replays(spark, workdir, tmp_path):

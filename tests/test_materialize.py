@@ -75,6 +75,36 @@ def test_delete_tombstone_survives_late_redelivery(spark, tmp_path):
     assert st == {"a": b"v1", "b": b"reborn"}
 
 
+def test_empty_batch_publishes_nothing(spark, tmp_path):
+    """An empty batch neither creates a state nor publishes a snapshot, so
+    no version leaves time-travel retention; a caller that counted the
+    rows passes ``rows`` instead of the merge probing for one."""
+    from brooklin_spark.sinks.materialize import read_raw_state, read_state_at
+
+    root = str(tmp_path / "state")
+    empty = _envelope_rows(spark, [("a", "v", "INSERT", 1)]).limit(0)
+    merge_batch(empty, root, spark)
+    assert current_version(root) is None
+
+    merge_batch(_envelope_rows(spark, [("a", "v0", "INSERT", 1)]), root, spark)
+    merge_batch(
+        _envelope_rows(spark, [("a", "v1", "INSERT", 2), ("b", None, "DELETE", 3)]),
+        root, spark,
+    )
+
+    def raw() -> list:
+        return sorted(read_raw_state(spark, root).collect())
+
+    before = raw()
+    merge_batch(empty, root, spark)
+    merge_batch(empty, root, spark, rows=0)
+    assert current_version(root) == 2 and raw() == before
+    assert [bytes(r.value) for r in read_state_at(spark, root, 1).collect()] == [b"v0"]
+
+    merge_batch(_envelope_rows(spark, [("c", "v2", "INSERT", 4)]), root, spark, rows=1)
+    assert {r.k for r in read_state(spark, root).collect()} == {"a", "c"}
+
+
 def test_bootstrap_events_materialize_matches_batch_query(spark, tmp_path, sf_smoke):
     """Pipeline: parquet events bootstrap → materialize transport; final
     state table == the oracle-checked cdc_apply_upserts query."""

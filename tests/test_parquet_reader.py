@@ -266,7 +266,10 @@ def test_merge_into_existing_state_launches_no_inference_job(spark, tmp_path):
 
 def test_resume_flush_launches_no_inference_job(spark, tmp_path):
     """The lifecycle path resume_source_partitions → _flush_holding →
-    merge_batch reads the holding pen and the state with declared schemas."""
+    merge_batch reads the holding pen and the state with declared schemas.
+    The flush counts the rows it delivers from the pen's files, so the
+    merge is only its write jobs (no ``isEmpty`` probe, no query restart),
+    and resuming a partition with nothing held launches no job at all."""
     src = str(tmp_path / "in")
     os.makedirs(src)
     root = str(tmp_path / "state")
@@ -283,9 +286,17 @@ def test_resume_flush_launches_no_inference_job(spark, tmp_path):
     _write_lines(held, ["h1", "h2"])
     mgr.process_available("flush")
     assert {bytes(r.value) for r in read_state(spark, root).collect()} == {b"s1"}
+    empty = (_file_partition(held) + 1) % 32
+    mgr.pause_source_partitions("flush", [empty])
+    with _job_group(spark) as jobs:
+        mgr.resume_source_partitions("flush", [empty])
+    assert jobs == [], jobs
     with _job_group(spark) as jobs:
         mgr.resume_source_partitions("flush")
     assert _inference_jobs(jobs) == [], jobs
+    assert [n for n in jobs if n.startswith("isEmpty")] == [], jobs
+    # the merge's two write jobs; 3 at the parent, with the isEmpty probe
+    assert len(jobs) == 2, jobs
     assert {bytes(r.value) for r in read_state(spark, root).collect()} == {
         b"s1", b"h1", b"h2",
     }
