@@ -95,18 +95,16 @@ def drop_scratch_table(spark, table_name: str) -> None:
 def scratch_name(base: str, corpus_path: str) -> str:
     """Collision-safe scratch-table name: <base>_<corpus-key>_<pid>.
 
-    The corpus key (abspath+mtime, same convention as the persisted BM25/
-    IVF index caches) separates back-to-back runs over different data; the
-    pid separates concurrent processes sharing one warehouse (the pytest-
-    alongside-bench case). Orphans from crashed runs are reclaimed by
-    gc_dead_scratch()."""
-    import hashlib
+    The corpus key (``io.source_key``: the path and its ``file_stamp``,
+    the key of every derived artifact) separates back-to-back runs over
+    different data; the pid separates concurrent processes sharing one
+    warehouse (the pytest-alongside-bench case). Orphans from crashed runs
+    are reclaimed by gc_dead_scratch()."""
     import os
 
-    key = hashlib.md5(
-        f"{os.path.abspath(corpus_path)}:{os.path.getmtime(corpus_path)}".encode()
-    ).hexdigest()[:8]
-    return f"{base}_{key}_{os.getpid()}"
+    from brooklin_spark.io import source_key
+
+    return f"{base}_{source_key([corpus_path])}_{os.getpid()}"
 
 
 def gc_dead_scratch(spark, prefix: str) -> None:

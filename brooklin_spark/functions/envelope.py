@@ -47,13 +47,6 @@ def broadcast_to_partitions(df: DataFrame, n_partitions: int) -> DataFrame:
     return exploded.select(*cols)
 
 
-def topic_rewrite(topic: Column | str, prefix: str) -> Column:
-    """Mirror destination-topic rewrite: prefix + source topic
-    (KafkaMirrorMakerConnectorTask.java:243-277)."""
-    t = F.col(topic) if isinstance(topic, str) else topic
-    return F.concat(F.lit(prefix), t)
-
-
 def events_to_envelope(events: DataFrame, topic: str = "events", partitions: int = 8) -> DataFrame:
     """Translate the demo events table into the engine envelope.
 

@@ -24,6 +24,22 @@ data, is what a read costs. The contract:
   reader, so two reads of one path get distinct attribute ids and a
   self-join of them resolves.
 
+Derived artifacts (an index, a stream split, a fixture file set) are
+built from source tables through ``derived(name, sources, build, *params)``:
+
+- The serving path is ``<tempdir>/bspark_<name>_<key>``; the key hashes
+  each source's absolute path and ``file_stamp`` plus ``params``
+  (``source_key``), so a source rewritten in place gets a fresh build and
+  is never served an artifact of its old contents. Stale builds are left
+  in place.
+- ``build(tmp)`` writes into a private ``<path>.building.<pid>`` dir; the
+  helper marks it complete with ``_SUCCESS`` at its root and publishes it
+  with ``atomic_publish``, so concurrent builders never serve a partial
+  or mixed build. A path whose ``_SUCCESS`` exists is returned at once.
+
+A caller that deletes a directory it read through ``read_parquet`` calls
+``forget(dir)`` after it, so the memo holds no entry for a deleted path.
+
 ``cdc_schema_evolution_union`` reads with ``mergeSchema=true`` on purpose
 (schema evolution is the point of that query) and is the one batch parquet
 read that bypasses this module (``tests/test_reachability.py`` holds the
@@ -84,6 +100,47 @@ def file_stamp(path: str) -> tuple | None:
     except OSError:
         return None
     return out
+
+
+def source_key(sources, *params) -> str:
+    """Hex key of each source's ``(abspath, file_stamp)`` and ``params``:
+    the one source-identity key of derived artifacts and scratch tables."""
+    import hashlib
+
+    ident = [(os.path.abspath(s), file_stamp(s)) for s in sources]
+    return hashlib.md5(repr((ident, params)).encode()).hexdigest()[:12]
+
+
+def derived(name: str, sources, build, *params) -> str:
+    """Serving path of the artifact ``name`` built from ``sources`` under
+    ``params``: built on first use by ``build(tmp)``, then published
+    atomically (see the module docstring)."""
+    import shutil
+    import tempfile
+
+    path = os.path.join(
+        tempfile.gettempdir(), f"bspark_{name}_{source_key(sources, *params)}"
+    )
+    if os.path.exists(os.path.join(path, "_SUCCESS")):
+        return path
+    tmp = f"{path}.building.{os.getpid()}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    try:
+        build(tmp)
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    atomic_publish(tmp, path)
+    return path
+
+
+def forget(root: str) -> None:
+    """Drop the memoized schemas of ``root`` and every path under it."""
+    root = os.path.abspath(root)
+    for p in [p for p in _SCHEMAS if p == root or p.startswith(root + os.sep)]:
+        del _SCHEMAS[p]
 
 
 def read_parquet(

@@ -28,7 +28,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from brooklin_spark.io import read_parquet
+from brooklin_spark.io import file_stamp, read_parquet
 
 SPEC_FILE = "_bucket_spec.json"
 
@@ -117,11 +117,12 @@ def spine_twin(spark: SparkSession, sf_dir: str) -> str | None:
     correctness environments have no twins, so their plans are unchanged).
 
     Provenance guard: each table's persisted ``_bucket_spec.json`` must
-    carry a ``source`` stamp (abspath + mtime of the parquet it was built
-    from) that matches sf_dir's file — a twin built from different data
-    that merely shares the directory basename, or whose source has since
-    been rewritten, is never routed to. Twins without the stamp (pre-r10
-    builds) are served only via an explicit ``bucketed:`` marker."""
+    carry a ``source`` stamp (abspath + ``io.file_stamp`` of the parquet
+    it was built from) that matches sf_dir's file — a twin built from
+    different data that merely shares the directory basename, or whose
+    source has since been rewritten, is never routed to. Twins without the
+    stamp are served only via an explicit ``bucketed:`` marker. The
+    catalog is checked first, so a corpus without a twin costs no stat."""
     if sf_dir.startswith("bucketed:") or not os.path.isdir(sf_dir):
         return None
     base = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
@@ -140,11 +141,7 @@ def spine_twin(spark: SparkSession, sf_dir: str) -> str | None:
                 with open(spec_path) as f:
                     src = json.load(f).get("source")
                 parquet = os.path.join(sf_dir, f"{t}.parquet")
-                if (
-                    not src
-                    or src.get("path") != os.path.abspath(parquet)
-                    or src.get("mtime") != os.path.getmtime(parquet)
-                ):
+                if src != _source_stamp(parquet):
                     ok = False
                     break
             if ok:
@@ -154,16 +151,20 @@ def spine_twin(spark: SparkSession, sf_dir: str) -> str | None:
     return None
 
 
+def _source_stamp(parquet_path: str) -> dict:
+    """The ``source`` entry of a spec, as JSON reads it back."""
+    src = {"path": os.path.abspath(parquet_path), "stamp": file_stamp(parquet_path)}
+    return json.loads(json.dumps(src))
+
+
 def stamp_source(table_loc: str, parquet_path: str) -> None:
-    """Record the corpus a bucketed table was built from in its persisted
-    spec — what spine_twin() validates before auto-routing."""
+    """Record the corpus a bucketed table was built from (its path and
+    ``io.file_stamp``) in its persisted spec — what spine_twin() validates
+    before auto-routing."""
     spec_path = os.path.join(table_loc, SPEC_FILE)
     with open(spec_path) as f:
         spec = json.load(f)
-    spec["source"] = {
-        "path": os.path.abspath(parquet_path),
-        "mtime": os.path.getmtime(parquet_path),
-    }
+    spec["source"] = _source_stamp(parquet_path)
     with open(spec_path, "w") as f:
         json.dump(spec, f)
 

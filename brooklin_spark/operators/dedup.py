@@ -168,6 +168,33 @@ def capped_postings(shingles: DataFrame, max_posting: int = MAX_POSTING) -> Data
     )
 
 
+def shingle_overlaps(
+    shingles: DataFrame, max_posting: int = MAX_POSTING
+) -> DataFrame:
+    """(doc_a, doc_b, na, nb, common) for every doc pair sharing >= 1
+    capped shingle, doc_a < doc_b: the two set sizes and the overlap that
+    every set-similarity measure (Jaccard, containment) is a ratio of.
+    ``shingles`` is (id, n, shingle) with the per-doc set size carried on
+    every row, so one self-join and one groupBy produce them all."""
+    capped = capped_postings(shingles, max_posting)
+    a = capped.alias("a")
+    b = capped.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .groupBy(
+            F.col("a.id").alias("doc_a"),
+            F.col("b.id").alias("doc_b"),
+            F.col("a.n").alias("na"),
+            F.col("b.n").alias("nb"),
+        )
+        .agg(F.count("*").alias("common"))
+    )
+
+
 def jaccard_pairs_selfjoin(
     shingles: DataFrame, threshold: float, max_posting: int = MAX_POSTING
 ) -> DataFrame:
@@ -187,23 +214,7 @@ def jaccard_pairs_selfjoin(
     rows first so the kernel runs once.
     Returns (doc_a, doc_b, jaccard), doc_a < doc_b.
     """
-    capped = capped_postings(shingles, max_posting)
-    a = capped.alias("a")
-    b = capped.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(
-            F.col("a.id").alias("doc_a"),
-            F.col("b.id").alias("doc_b"),
-            F.col("a.n").alias("na"),
-            F.col("b.n").alias("nb"),
-        )
-        .agg(F.count("*").alias("common"))
-    )
+    common = shingle_overlaps(shingles, max_posting)
     jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
     return common.select(
         "doc_a", "doc_b", jac.alias("jaccard")

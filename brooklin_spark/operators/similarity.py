@@ -108,10 +108,6 @@ def _norm(a: Column) -> Column:
     )
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn("_norm", _norm(F.col(vec_col)))
-
-
 def cosine(a_vec: Column, b_vec: Column, a_norm: Column, b_norm: Column) -> Column:
     """Cosine similarity rounded to 6 decimals (cross-engine-stable: fold
     order noise ~1e-15 << 1e-6 grid)."""

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from brooklin_spark.io import read_parquet, table
+from brooklin_spark.io import derived, read_parquet, table
 from brooklin_spark.operators import dedup as D
 from brooklin_spark.queries import _sqlgen as G
 from brooklin_spark.registry import query
@@ -180,11 +180,12 @@ def dedup_incremental_new_vs_base(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 # Persisted-index form of the increment flow — the production shape run
 # end-to-end: the BASE corpus is signed ONCE into an on-disk index
-# (band rows + shingle arrays + content fingerprints, parquet, built on
-# first use per sf like the persisted IVF index) and the query touches
-# base documents ONLY through that index. Per-increment cost is O(new):
-# two Arrow kernels over the 20% batch, one fp semi-join, one
-# band-keyed equi-join against the index, candidate-only verify.
+# (band rows + shingle arrays + content fingerprints, parquet, a derived
+# artifact of documents.parquet like the persisted IVF index) and the
+# query touches base documents ONLY through that index. Per-increment
+# cost is O(new): two Arrow kernels over the 20% batch, one fp
+# semi-join, one band-keyed equi-join against the index, candidate-only
+# verify.
 # Oracle identical to dedup_incremental_new_vs_base — same answer,
 # index-probe plan.
 # ---------------------------------------------------------------------------
@@ -201,20 +202,9 @@ def _split_docs(docs: DataFrame) -> DataFrame:
 
 def _base_dedup_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (once) the base-corpus dedup index: bands/, arrays/, fps/."""
-    import hashlib
     import os
-    import shutil
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = hashlib.md5(
-        f"{os.path.abspath(src)}:{os.path.getmtime(src)}:"
-        f"{_INC_MH}:{_INC_BANDS}:{_INC_ROWS}:{_INC_BUCKETS}:{_INC_NEW}:"
-        f"{_INC_TH}:{_INC_SHINGLE_N}".encode()
-    ).hexdigest()[:12]
-    idx = os.path.join("/tmp", f"bspark_dedup_idx_{key}")
-    if not os.path.exists(os.path.join(idx, "_SUCCESS")):
-        tmp = idx + ".building"
-        shutil.rmtree(tmp, ignore_errors=True)
+    def build(out: str) -> None:
         base = _split_docs(table(spark, sf_dir, "documents")).filter(
             ~F.col("is_new")
         )
@@ -222,15 +212,25 @@ def _base_dedup_index(spark: SparkSession, sf_dir: str) -> str:
         sig = D.minhash_signature_pandas(arr, num_hashes=_INC_MH)
         D.band_rows(sig, bands=_INC_BANDS, rows_per_band=_INC_ROWS).write.mode(
             "overwrite"
-        ).parquet(os.path.join(tmp, "bands"))
-        arr.write.mode("overwrite").parquet(os.path.join(tmp, "arrays"))
+        ).parquet(os.path.join(out, "bands"))
+        arr.write.mode("overwrite").parquet(os.path.join(out, "arrays"))
         base.select(
             F.col("doc_id").alias("id"), F.md5("text").alias("fp")
-        ).write.mode("overwrite").parquet(os.path.join(tmp, "fps"))
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        shutil.rmtree(idx, ignore_errors=True)
-        os.rename(tmp, idx)
-    return idx
+        ).write.mode("overwrite").parquet(os.path.join(out, "fps"))
+
+    src = os.path.join(sf_dir, "documents.parquet")
+    return derived(
+        "dedup_idx",
+        [src],
+        build,
+        _INC_MH,
+        _INC_BANDS,
+        _INC_ROWS,
+        _INC_BUCKETS,
+        _INC_NEW,
+        _INC_TH,
+        _INC_SHINGLE_N,
+    )
 
 
 from brooklin_spark import registry as _registry

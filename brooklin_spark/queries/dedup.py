@@ -681,22 +681,7 @@ _CONTAIN_T = 0.8
 )
 def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    capped = D.capped_postings(D.hashed_shingle_rows(docs))
-    a, b = capped.alias("a"), capped.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(
-            F.col("a.id").alias("doc_a"),
-            F.col("b.id").alias("doc_b"),
-            F.col("a.n").alias("na"),
-            F.col("b.n").alias("nb"),
-        )
-        .agg(F.count("*").alias("common"))
-    )
+    common = D.shingle_overlaps(D.hashed_shingle_rows(docs))
     containment = F.col("common") / F.least("na", "nb")
     jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
     return common.select(

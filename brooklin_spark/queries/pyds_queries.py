@@ -13,7 +13,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from brooklin_spark.io import read_parquet
+from brooklin_spark.io import derived, read_parquet
 from brooklin_spark.registry import query
 from brooklin_spark.sources import pyds
 from brooklin_spark.streaming.pipelines import run_to_completion
@@ -398,51 +398,47 @@ _EVO_READER = {
 
 
 def _prepare_evolved_ocf(sf_dir: str) -> str:
-    import hashlib
-    import json as _json
+    """The two OCF generations of orders, a derived artifact of
+    orders.parquet."""
     import os
 
     import pyarrow.parquet as pq
 
     from brooklin_spark.functions.avro_ocf import write_ocf
 
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    out_dir = os.path.join("/tmp", "brooklin_ocf_evo", tag)
-    done = os.path.join(out_dir, "_SUCCESS")
-    if os.path.exists(done):
-        return out_dir
-    os.makedirs(out_dir, exist_ok=True)
-    rows = pq.read_table(
-        os.path.join(sf_dir, "orders.parquet"),
-        columns=["o_orderkey", "o_totalprice", "o_orderpriority"],
-    ).to_pylist()
-    gen1 = [
-        {"o_orderkey": r["o_orderkey"], "o_totalprice": r["o_totalprice"]}
-        for r in rows
-        if r["o_orderkey"] % 2 == 0
-    ]
-    gen2 = [r for r in rows if r["o_orderkey"] % 2 == 1]
-    v1 = {
-        "type": "record",
-        "name": "OrderV1",
-        "fields": [
-            {"name": "o_orderkey", "type": "long"},
-            {"name": "o_totalprice", "type": "double"},
-        ],
-    }
-    v2 = {
-        "type": "record",
-        "name": "OrderV2",
-        "fields": [
-            {"name": "o_orderkey", "type": "long"},
-            {"name": "o_totalprice", "type": "double"},
-            {"name": "o_orderpriority", "type": "string"},
-        ],
-    }
-    write_ocf(os.path.join(out_dir, "gen1-0000.avro"), v1, gen1)
-    write_ocf(os.path.join(out_dir, "gen2-0000.avro"), v2, gen2)
-    open(done, "w").close()
-    return out_dir
+    src = os.path.join(sf_dir, "orders.parquet")
+
+    def build(out: str) -> None:
+        rows = pq.read_table(
+            src, columns=["o_orderkey", "o_totalprice", "o_orderpriority"]
+        ).to_pylist()
+        gen1 = [
+            {"o_orderkey": r["o_orderkey"], "o_totalprice": r["o_totalprice"]}
+            for r in rows
+            if r["o_orderkey"] % 2 == 0
+        ]
+        gen2 = [r for r in rows if r["o_orderkey"] % 2 == 1]
+        v1 = {
+            "type": "record",
+            "name": "OrderV1",
+            "fields": [
+                {"name": "o_orderkey", "type": "long"},
+                {"name": "o_totalprice", "type": "double"},
+            ],
+        }
+        v2 = {
+            "type": "record",
+            "name": "OrderV2",
+            "fields": [
+                {"name": "o_orderkey", "type": "long"},
+                {"name": "o_totalprice", "type": "double"},
+                {"name": "o_orderpriority", "type": "string"},
+            ],
+        }
+        write_ocf(os.path.join(out, "gen1-0000.avro"), v1, gen1)
+        write_ocf(os.path.join(out, "gen2-0000.avro"), v2, gen2)
+
+    return derived("ocf_evo", [src], build)
 
 
 @query(

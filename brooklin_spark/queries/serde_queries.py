@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from brooklin_spark.functions import serde
-from brooklin_spark.io import table
+from brooklin_spark.io import derived, table
 from brooklin_spark.registry import query
 
 _SCHEMA_ID = hashlib.md5(serde.DATASTREAM_EVENT_AVRO.encode()).hexdigest()
@@ -87,7 +87,7 @@ def serde_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Avro OCF source: orders materialized as real Object Container Files
 # (functions/avro_ocf.py, fixture prep below is deterministic and cached
-# per sf), read back DISTRIBUTED (binaryFile scan + one Arrow decode task
+# per stamp), read back DISTRIBUTED (binaryFile scan + one Arrow decode task
 # per file) and aggregated on the DECODED fields. The DuckDB oracle runs
 # the same aggregate on the original parquet, so any byte-level encode/
 # decode drift in the long/double/string paths surfaces as a mismatch.
@@ -110,39 +110,27 @@ _OCF_SCHEMA = {
 _OCF_N_FILES = 4
 
 
-def _ocf_fixture_dir(sf_dir: str) -> str:
-    import hashlib as _h
-    import os
-
-    tag = _h.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return os.path.join("/tmp", "brooklin_ocf_cache", tag)
-
-
 def _prepare_orders_ocf(sf_dir: str) -> str:
-    """Write orders as _OCF_N_FILES container files (once per sf dir).
-    Driver-side test scaffolding — the PRODUCT here is the distributed
-    reader; a real deployment's OCF files arrive from producers."""
+    """orders as _OCF_N_FILES container files, a derived artifact of
+    orders.parquet. Driver-side test scaffolding — the PRODUCT here is the
+    distributed reader; a real deployment's OCF files arrive from
+    producers."""
     import os
 
     import pyarrow.parquet as pq
 
     from brooklin_spark.functions.avro_ocf import write_ocf
 
-    out_dir = _ocf_fixture_dir(sf_dir)
-    done = os.path.join(out_dir, "_SUCCESS")
-    if os.path.exists(done):
-        return out_dir
-    os.makedirs(out_dir, exist_ok=True)
-    t = pq.read_table(
-        os.path.join(sf_dir, "orders.parquet"), columns=_OCF_FIELDS
-    ).to_pylist()
-    per = (len(t) + _OCF_N_FILES - 1) // _OCF_N_FILES
-    for i in range(_OCF_N_FILES):
-        chunk = t[i * per : (i + 1) * per]
-        write_ocf(os.path.join(out_dir, f"part-{i:04d}.avro"), _OCF_SCHEMA, chunk)
-    with open(done, "w") as f:
-        f.write("ok")
-    return out_dir
+    src = os.path.join(sf_dir, "orders.parquet")
+
+    def build(out: str) -> None:
+        t = pq.read_table(src, columns=_OCF_FIELDS).to_pylist()
+        per = (len(t) + _OCF_N_FILES - 1) // _OCF_N_FILES
+        for i in range(_OCF_N_FILES):
+            chunk = t[i * per : (i + 1) * per]
+            write_ocf(os.path.join(out, f"part-{i:04d}.avro"), _OCF_SCHEMA, chunk)
+
+    return derived("ocf_orders", [src], build, _OCF_N_FILES)
 
 
 @query(

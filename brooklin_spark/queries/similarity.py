@@ -10,7 +10,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from brooklin_spark.io import atomic_publish, read_parquet, table
+from brooklin_spark.io import derived, read_parquet, table
 from brooklin_spark.operators import similarity as S
 from brooklin_spark.queries import _sqlgen as G
 from brooklin_spark.registry import query
@@ -449,7 +449,7 @@ def embedding_outlier_zscores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Persisted-index IVF: the build-once / query-many production shape. The
 # (vec_id, cid) assignment table — the IVF inverted file — is built on
-# first use and cached as parquet keyed by the corpus file's identity;
+# first use as a derived artifact of embeddings.parquet (``io.derived``);
 # subsequent queries skip the corpus-wide assignment pass entirely and
 # only touch probes + candidates. Results are identical to ann_ivf_topk
 # (same oracle), which is the point: persisting the index changes cost,
@@ -457,27 +457,20 @@ def embedding_outlier_zscores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
+def _ivf_index(
+    spark: SparkSession, sf_dir: str, name: str, where: str = "true"
+) -> DataFrame:
+    """The persisted (vec_id, cid) assignment of the vectors matching the
+    SQL filter ``where``, cached as artifact ``name``."""
+    import os
 
-    src = _os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{_os.path.abspath(src)}:{_os.path.getmtime(src)}:{_IVF_C}".encode()
-    ).hexdigest()[:12]
-    idx = _os.path.join(_tempfile.gettempdir(), f"bspark_ivf_idx_{key}")
-    if not _os.path.exists(_os.path.join(idx, "_SUCCESS")):
+    def build(out: str) -> None:
         emb = table(spark, sf_dir, "embeddings")
         cent = emb.filter(F.col("vec_id") < _IVF_C)
-        # pid-suffixed build dir + atomic publish (same race discipline as
-        # _bm25_index: a shared temp dir could interleave two builders)
-        tmp = f"{idx}.building.{_os.getpid()}"
-        _shutil.rmtree(tmp, ignore_errors=True)
-        S.ivf_assign(emb, cent).write.mode("overwrite").parquet(tmp)
-        atomic_publish(tmp, idx)
-    return read_parquet(spark, idx)
+        S.ivf_assign(emb.filter(where), cent).write.mode("overwrite").parquet(out)
+
+    src = os.path.join(sf_dir, "embeddings.parquet")
+    return read_parquet(spark, derived(name, [src], build, _IVF_C, where))
 
 
 from brooklin_spark import registry as _registry
@@ -488,8 +481,9 @@ def ann_ivf_topk_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     cent = emb.filter(F.col("vec_id") < _IVF_C)
     queries = emb.filter(F.col("vec_id") < 10)
+    assign = _ivf_index(spark, sf_dir, "ivf_idx")
     return S.ivf_topk(
-        queries, emb, cent, k=_IVF_K, nprobe=_IVF_NPROBE, assign=_ivf_index(spark, sf_dir)
+        queries, emb, cent, k=_IVF_K, nprobe=_IVF_NPROBE, assign=assign
     )
 
 
@@ -1708,8 +1702,9 @@ def ann_mrl_funnel_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Incremental IVF index refresh — the ANN twin of text_bm25_index_refresh:
 # the persisted base inverted file (80% of vectors, vec_id % 5 != 0) is
-# read as-is; only the delta batch pays the assignment matmul (O(delta),
-# shuffle-free); the probe unions base and delta assignments. Per-vector
+# read as-is (_ivf_index over the base filter); only the delta batch pays
+# the assignment matmul (O(delta), shuffle-free); the probe unions base
+# and delta assignments. Per-vector
 # assignments are independent given fixed centroids, so the union is
 # provably the full index — the oracle IS ann_ivf_topk's from-scratch SQL.
 # ---------------------------------------------------------------------------
@@ -1717,36 +1712,13 @@ def ann_mrl_funnel_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVFR_MOD = 5
 
 
-def _ivf_base_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    src = _os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{_os.path.abspath(src)}:{_os.path.getmtime(src)}:{_IVF_C}:base{_IVFR_MOD}".encode()
-    ).hexdigest()[:12]
-    idx = _os.path.join(_tempfile.gettempdir(), f"bspark_ivf_base_{key}")
-    if not _os.path.exists(_os.path.join(idx, "_SUCCESS")):
-        emb = table(spark, sf_dir, "embeddings")
-        cent = emb.filter(F.col("vec_id") < _IVF_C)
-        base = emb.filter(F.col("vec_id") % _IVFR_MOD != 0)
-        tmp = f"{idx}.building.{_os.getpid()}"
-        _shutil.rmtree(tmp, ignore_errors=True)
-        S.ivf_assign(base, cent).write.mode("overwrite").parquet(tmp)
-        atomic_publish(tmp, idx)
-    return read_parquet(spark, idx)
-
-
 @query("ann_ivf_index_refresh", oracle=_registry.ORACLES["ann_ivf_topk"])
 def ann_ivf_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     cent = emb.filter(F.col("vec_id") < _IVF_C)
     delta = emb.filter(F.col("vec_id") % _IVFR_MOD == 0)
-    assign = _ivf_base_index(spark, sf_dir).unionByName(
-        S.ivf_assign(delta, cent)
-    )
+    base = _ivf_index(spark, sf_dir, "ivf_base", f"vec_id % {_IVFR_MOD} != 0")
+    assign = base.unionByName(S.ivf_assign(delta, cent))
     queries = emb.filter(F.col("vec_id") < 10)
     return S.ivf_topk(
         queries, emb, cent, k=_IVF_K, nprobe=_IVF_NPROBE, assign=assign

@@ -22,7 +22,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from brooklin_spark.io import read_parquet, table
+from brooklin_spark.io import derived, forget, read_parquet, table
 
 from brooklin_spark.queries import _sqlgen as G
 from brooklin_spark.registry import query
@@ -475,38 +475,62 @@ def _split_table_for_stream(
     """Deterministic id-ordered split of <name>.parquet into n_chunks
     files with strictly increasing mtimes, so FileStreamSource (which
     orders by modification time) replays them as n_chunks sequential
-    micro-batches. Cached per (path, mtime) under the system temp dir."""
-    import hashlib
-    import shutil
+    micro-batches. A derived artifact of the table (``io.derived``)."""
     import time as _time
 
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, f"{name}.parquet")
-    key = hashlib.md5(
-        f"{os.path.abspath(src)}:{os.path.getmtime(src)}:{n_chunks}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"bspark_{name}_stream_{key}")
-    if os.path.exists(os.path.join(out, "_SPLIT_DONE")):
-        return out
-    tmp = out + ".building"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    t = pq.read_table(src)
-    t = t.take(pc.sort_indices(t, sort_keys=[(sort_key, "ascending")]))
-    n = t.num_rows
-    now = _time.time()
-    for k in range(n_chunks):
-        lo, hi = k * n // n_chunks, (k + 1) * n // n_chunks
-        path = os.path.join(tmp, f"chunk-{k:04d}.parquet")
-        pq.write_table(t.slice(lo, hi - lo), path)
-        ts = now - (n_chunks - k) * 10
-        os.utime(path, (ts, ts))
-    open(os.path.join(tmp, "_SPLIT_DONE"), "w").close()
-    shutil.rmtree(out, ignore_errors=True)
-    os.rename(tmp, out)
-    return out
+
+    def build(out: str) -> None:
+        t = pq.read_table(src)
+        t = t.take(pc.sort_indices(t, sort_keys=[(sort_key, "ascending")]))
+        n = t.num_rows
+        now = _time.time()
+        for k in range(n_chunks):
+            lo, hi = k * n // n_chunks, (k + 1) * n // n_chunks
+            path = os.path.join(out, f"chunk-{k:04d}.parquet")
+            pq.write_table(t.slice(lo, hi - lo), path)
+            ts = now - (n_chunks - k) * 10
+            os.utime(path, (ts, ts))
+
+    return derived(f"{name}_stream", [src], build, n_chunks)
+
+
+def ingest(spark: SparkSession, split_dir: str, step, drain) -> DataFrame:
+    """The bounded foreachBatch ingest: replay ``split_dir`` one file per
+    micro-batch into ``step(work, batch_df, epoch)``, then return
+    ``drain(work)`` checkpointed. ``work`` is a fresh temp dir holding the
+    query's stores and checkpoint; it is removed (and ``io.forget``-ed)
+    before returning — a production deployment keeps the stores as its
+    output tables."""
+    import shutil
+
+    schema = read_parquet(spark, split_dir).schema
+    work = tempfile.mkdtemp(prefix="bspark_ingest_")
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(split_dir)
+        .writeStream.foreachBatch(lambda df, epoch: step(work, df, epoch))
+        .option("checkpointLocation", os.path.join(work, "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        return drain(work).localCheckpoint(eager=True)
+    finally:
+        q.stop()
+        shutil.rmtree(work, ignore_errors=True)
+        forget(work)
+
+
+def _epoch_write(df: DataFrame, store: str, epoch: int) -> None:
+    """Write one micro-batch's output to ``store/epoch=<epoch>``,
+    IDEMPOTENT per epoch: foreachBatch is at-least-once, so a re-executed
+    batch overwrites its own epoch dir instead of appending twice."""
+    df.write.mode("overwrite").parquet(os.path.join(store, f"epoch={epoch}"))
 
 
 @query(
@@ -558,19 +582,14 @@ def _minhash_ingest_run(spark, split_dir, on_epoch_bytes=None) -> DataFrame:
     on_epoch_bytes(bytes_appended) is a test hook."""
     import functools
     import operator as pyop
-    import shutil
 
     from brooklin_spark.operators import dedup as D
 
-    schema = read_parquet(spark, split_dir).schema
-    work = tempfile.mkdtemp(prefix="bspark_ingest_dedup_")
-    store = os.path.join(work, "bucket_store")
-    surv = os.path.join(work, "survivors")
-    ckpt = os.path.join(work, "ckpt")
     keys = ["band_id"] + [f"k{r}" for r in range(_ING_ROWS)]
 
-    def step(batch_df: DataFrame, _epoch: int) -> None:
+    def step(work: str, batch_df: DataFrame, epoch: int) -> None:
         sess = batch_df.sparkSession
+        store = os.path.join(work, "bucket_store")
         arr = D.shingle_arrays_pandas(batch_df, n=3).filter(F.size("shingles") > 0)
         sig = D.minhash_signature_pandas(arr, num_hashes=_ING_MH)
         banded = D.band_rows(
@@ -595,13 +614,9 @@ def _minhash_ingest_run(spark, split_dir, on_epoch_bytes=None) -> DataFrame:
         keep = batch_df.select("doc_id", "source").join(
             dropped.distinct(), "doc_id", "left_anti"
         )
-        # IDEMPOTENT per epoch: foreachBatch is at-least-once, so a
-        # re-executed batch overwrites ITS OWN epoch dir instead of
-        # double-appending survivors (store-band duplicates stay harmless
-        # by the semi-join argument, but survivor rows must not repeat)
-        keep.write.mode("overwrite").parquet(
-            os.path.join(surv, f"epoch={_epoch}")
-        )
+        # store-band duplicates stay harmless by the semi-join argument,
+        # but survivor rows must not repeat: epoch-keyed overwrite
+        _epoch_write(keep, os.path.join(work, "survivors"), epoch)
         if on_epoch_bytes is not None:
             pre = _dir_parquet_bytes(store)
         # append ONLY this batch's bands — never rewrite the store
@@ -611,25 +626,14 @@ def _minhash_ingest_run(spark, split_dir, on_epoch_bytes=None) -> DataFrame:
         if on_epoch_bytes is not None:
             on_epoch_bytes(_dir_parquet_bytes(store) - pre)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_dir)
-        .writeStream.foreachBatch(step)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        out = (
-            read_parquet(spark, surv)
-            .select("doc_id", "source")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        q.stop()
-        shutil.rmtree(work, ignore_errors=True)
-    return out
+    return ingest(spark, split_dir, step, _survivors(spark))
+
+
+def _survivors(spark: SparkSession):
+    """The drain of the dedup ingests: the surviving (doc_id, source)."""
+    return lambda work: read_parquet(
+        spark, os.path.join(work, "survivors")
+    ).select("doc_id", "source")
 
 
 # ---------------------------------------------------------------------------
@@ -677,18 +681,11 @@ def _simhash_ingest_run(spark, split_dir, on_epoch_bytes=None) -> DataFrame:
     the store carries (band_id, band_key, sig) so the hamming filter can
     run against stored signatures. Duplicate store rows across batches
     only duplicate `dropped` candidates, which .distinct() absorbs."""
-    import shutil
-
     from brooklin_spark.operators import dedup as D
 
-    schema = read_parquet(spark, split_dir).schema
-    work = tempfile.mkdtemp(prefix="bspark_ingest_simhash_")
-    store = os.path.join(work, "band_store")
-    surv = os.path.join(work, "survivors")
-    ckpt = os.path.join(work, "ckpt")
-
-    def step(batch_df: DataFrame, _epoch: int) -> None:
+    def step(work: str, batch_df: DataFrame, epoch: int) -> None:
         sess = batch_df.sparkSession
+        store = os.path.join(work, "band_store")
         arr = D.shingle_arrays_pandas(batch_df, n=3).filter(F.size("shingles") > 0)
         sig = D.simhash_signature_int_pandas(arr, bits=_ING_BITS)
         banded = D.simhash_band_rows(
@@ -722,10 +719,7 @@ def _simhash_ingest_run(spark, split_dir, on_epoch_bytes=None) -> DataFrame:
         keep = batch_df.select("doc_id", "source").join(
             dropped.distinct(), "doc_id", "left_anti"
         )
-        # idempotent per epoch — see _minhash_ingest_run
-        keep.write.mode("overwrite").parquet(
-            os.path.join(surv, f"epoch={_epoch}")
-        )
+        _epoch_write(keep, os.path.join(work, "survivors"), epoch)
         if on_epoch_bytes is not None:
             pre = _dir_parquet_bytes(store)
         # append ONLY this batch's bands — never rewrite the store
@@ -735,25 +729,7 @@ def _simhash_ingest_run(spark, split_dir, on_epoch_bytes=None) -> DataFrame:
         if on_epoch_bytes is not None:
             on_epoch_bytes(_dir_parquet_bytes(store) - pre)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_dir)
-        .writeStream.foreachBatch(step)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        out = (
-            read_parquet(spark, surv)
-            .select("doc_id", "source")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        q.stop()
-        shutil.rmtree(work, ignore_errors=True)
-    return out
+    return ingest(spark, split_dir, step, _survivors(spark))
 
 
 # ---------------------------------------------------------------------------
@@ -781,8 +757,6 @@ def _simhash_ingest_run(spark, split_dir, on_epoch_bytes=None) -> DataFrame:
 
 @query("streaming_dedup_semantic_ingest")
 def streaming_dedup_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from brooklin_spark.operators import similarity as S
     from brooklin_spark.queries.similarity import _SDD_MIN_C, _SDD_PER, _SDD_TH
 
@@ -796,14 +770,9 @@ def streaming_dedup_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFra
         emb.filter(F.col("vec_id") < k), "vec_id", "embedding"
     )
 
-    schema = read_parquet(spark, split_dir).schema
-    work = tempfile.mkdtemp(prefix="bspark_ingest_semantic_")
-    store = os.path.join(work, "ivf_store")
-    out_dir = os.path.join(work, "manifest")
-    ckpt = os.path.join(work, "ckpt")
-
-    def step(batch_df: DataFrame, _epoch: int) -> None:
+    def step(work: str, batch_df: DataFrame, epoch: int) -> None:
         sess = batch_df.sparkSession
+        store = os.path.join(work, "ivf_store")
         assigned = S.semdedup_assign(batch_df, c_ids, cm).localCheckpoint()
         probe = assigned.withColumn("probe", F.lit(True))
         if _store_has_parquet(store):
@@ -815,35 +784,21 @@ def streaming_dedup_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFra
             )
             probe = probe.unionByName(st)
         flags = S.semdedup_probe_flags(probe, threshold=_SDD_TH)
-        # idempotent per epoch — see _minhash_ingest_run
-        flags.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={_epoch}")
-        )
+        _epoch_write(flags, os.path.join(work, "manifest"), epoch)
         # append ONLY this batch's vectors, partitioned by cid (the IVF
         # inverted-file layout) — never rewrite the store
         assigned.select("cid", "id", "vec").write.mode("append").partitionBy(
             "cid"
         ).parquet(store)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_dir)
-        .writeStream.foreachBatch(step)
-        .option("checkpointLocation", ckpt)
-        .start()
+    return ingest(
+        spark,
+        split_dir,
+        step,
+        lambda work: read_parquet(spark, os.path.join(work, "manifest")).select(
+            "vec_id", "cid", "keep"
+        ),
     )
-    try:
-        q.processAllAvailable()
-        out = (
-            read_parquet(spark, out_dir)
-            .select("vec_id", "cid", "keep")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        q.stop()
-        shutil.rmtree(work, ignore_errors=True)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1019,95 +974,26 @@ def streaming_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,  # set below: shares text_bm25_search's full-corpus oracle
 )
 def streaming_bm25_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    from brooklin_spark.functions import text as X
     from brooklin_spark.queries.text import (
-        _BM25_B,
-        _BM25_K1,
-        _BM25_TERMS,
+        _bm25_postings,
+        _bm25_scored_from_index,
+        _bm25_stats,
+        _bm25_top20,
     )
 
-    split_dir = _split_documents_for_stream(sf_dir)
-    schema = read_parquet(spark, split_dir).schema
-    work = tempfile.mkdtemp(prefix="bspark_bm25_ingest_")
-    post_store = os.path.join(work, "postings")
-    stats_store = os.path.join(work, "stats")
-    ckpt = os.path.join(work, "ckpt")
+    def step(work: str, batch_df: DataFrame, epoch: int) -> None:
+        flat = _bm25_postings(batch_df).localCheckpoint()  # read twice below
+        _epoch_write(flat, os.path.join(work, "postings"), epoch)
+        _epoch_write(_bm25_stats(flat), os.path.join(work, "stats"), epoch)
 
-    def step(batch_df: DataFrame, _epoch: int) -> None:
-        toks = batch_df.select("doc_id", F.explode(X.tokens()).alias("term"))
-        lens = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-        tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-        flat = (
-            tf.join(lens, "doc_id")
-            .select("term", "doc_id", "tf", "dl")
-            .localCheckpoint()  # feeds postings AND would re-tokenize twice
+    def drain(work: str) -> DataFrame:
+        scored = _bm25_scored_from_index(
+            read_parquet(spark, os.path.join(work, "postings")),
+            read_parquet(spark, os.path.join(work, "stats")),
         )
-        # epoch-keyed overwrite: a re-executed batch replaces its own
-        # directory instead of double-appending postings
-        flat.write.mode("overwrite").parquet(
-            os.path.join(post_store, f"epoch={_epoch}")
-        )
-        flat.select("doc_id", "dl").distinct().agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum("dl").cast("bigint").alias("sum_dl"),
-        ).write.mode("overwrite").parquet(
-            os.path.join(stats_store, f"epoch={_epoch}")
-        )
+        return _bm25_top20(scored)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_dir)
-        .writeStream.foreachBatch(step)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        post = read_parquet(spark, post_store).filter(
-            F.col("term").isin(*_BM25_TERMS)
-        )
-        stats = (
-            read_parquet(spark, stats_store)
-            .agg(
-                F.sum("n_docs").cast("double").alias("n_docs"),
-                (
-                    F.sum("sum_dl").cast("double")
-                    / F.sum("n_docs").cast("double")
-                ).alias("avgdl"),
-            )
-        )
-        dft = post.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-        scored = post.join(F.broadcast(dft), "term").crossJoin(
-            F.broadcast(stats)
-        )
-        idf = F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-        )
-        denom = F.col("tf") + _BM25_K1 * (
-            1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl")
-        )
-        scored = scored.groupBy("doc_id").agg(
-            F.sum(idf * F.col("tf") * (_BM25_K1 + 1) / denom).alias("score"),
-            F.count("*").alias("n_terms"),
-        )
-        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
-        rw = W.orderBy(F.desc("score"), F.asc("doc_id"))
-        out = top.select(
-            "doc_id",
-            F.round("score", 8).alias("score"),
-            F.col("n_terms").cast("bigint").alias("n_terms"),
-            F.row_number().over(rw).cast("bigint").alias("rank"),
-        ).localCheckpoint(eager=True)
-    finally:
-        q.stop()
-        shutil.rmtree(work, ignore_errors=True)
-    return out
-
-
+    return ingest(spark, _split_documents_for_stream(sf_dir), step, drain)
 
 
 # ---------------------------------------------------------------------------
@@ -1127,52 +1013,33 @@ def streaming_bm25_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("streaming_count_min_ingest")
 def streaming_count_min_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from brooklin_spark.queries.analytics import _CMS_K, _cms_grid, _cms_probe
 
-    split = _split_table_for_stream(sf_dir, "events", "event_id")
-    schema = read_parquet(spark, split).schema
-    work = tempfile.mkdtemp(prefix="bspark_cms_ingest_")
-    gstore = os.path.join(work, "grid")
-    ustore = os.path.join(work, "users")
-    ckpt = os.path.join(work, "ckpt")
-
-    def step(batch_df: DataFrame, _epoch: int) -> None:
-        _cms_grid(batch_df).write.mode("overwrite").parquet(
-            os.path.join(gstore, f"epoch={_epoch}")
+    def step(work: str, batch_df: DataFrame, epoch: int) -> None:
+        _epoch_write(_cms_grid(batch_df), os.path.join(work, "grid"), epoch)
+        _epoch_write(
+            batch_df.groupBy("user_id").agg(F.count("*").alias("c")),
+            os.path.join(work, "users"),
+            epoch,
         )
-        batch_df.groupBy("user_id").agg(F.count("*").alias("c")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(ustore, f"epoch={_epoch}"))
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split)
-        .writeStream.foreachBatch(step)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
+    def drain(work: str) -> DataFrame:
         grid = (
-            read_parquet(spark, gstore)
+            read_parquet(spark, os.path.join(work, "grid"))
             .groupBy("j", "col")
             .agg(F.sum("cnt").alias("cnt"))
         )
         truth = (
-            read_parquet(spark, ustore)
+            read_parquet(spark, os.path.join(work, "users"))
             .groupBy("user_id")
             .agg(F.sum("c").alias("true_cnt"))
             .orderBy(F.desc("true_cnt"), "user_id")
             .limit(_CMS_K)
         )
-        out = _cms_probe(grid, truth).localCheckpoint(eager=True)
-    finally:
-        q.stop()
-        shutil.rmtree(work, ignore_errors=True)
-    return out
+        return _cms_probe(grid, truth)
+
+    split = _split_table_for_stream(sf_dir, "events", "event_id")
+    return ingest(spark, split, step, drain)
 
 
 # share the full-corpus oracle: the ingest must equal a from-scratch build

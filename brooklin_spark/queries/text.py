@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from brooklin_spark.functions import text as X
-from brooklin_spark.io import atomic_publish, read_parquet, table
+from brooklin_spark.io import derived, read_parquet, table
 from brooklin_spark.operators.distrank import global_row_number
 from brooklin_spark.queries import _sqlgen as G
 from brooklin_spark.registry import query
@@ -1538,8 +1538,13 @@ def _bm25_scored(docs: DataFrame) -> DataFrame:
 )
 def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    scored = _bm25_scored(docs)
-    # Global top-20 rides TakeOrderedAndProject; the 20-row rank window is free.
+    return _bm25_top20(_bm25_scored(docs))
+
+
+def _bm25_top20(scored: DataFrame) -> DataFrame:
+    """(doc_id, score, n_terms, rank) of the 20 best-scored docs. The
+    global top-20 rides TakeOrderedAndProject; the 20-row rank window is
+    free."""
     top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
     rw = W.orderBy(F.desc("score"), F.asc("doc_id"))
     return top.select(
@@ -2411,77 +2416,80 @@ def _rrf_fuse(sparse: DataFrame, dense: DataFrame) -> DataFrame:
 # (tf, dl), range-partitioned and sorted by term so a probe's
 # term-IN-list prunes parquet files and row groups via min/max stats —
 # a 3-term query reads a vocabulary-local slice of the index, never the
-# corpus. Stats (n_docs, avgdl) ride a 1-row side file. At 100 TB the
-# index build is the one corpus-scale job (the same tokenize+groupBy the
-# per-query form pays EVERY time), amortized across every query after.
-# Keyed by corpus file identity, like the IVF cache.
+# corpus. Stats ride a 1-row side file as EXACT integers (n_docs, sum_dl),
+# not a pre-divided avg: stats of several indexes (a base and its delta,
+# or one per ingest epoch) then add without float error, and the probe's
+# one division reproduces the full-corpus AVG(dl) bit-for-bit. At 100 TB
+# the index build is the one corpus-scale job (the same tokenize+groupBy
+# the per-query form pays EVERY time), amortized across every query
+# after. A derived artifact of documents.parquet (``io.derived``).
 # ---------------------------------------------------------------------------
 
 
-def _bm25_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    import hashlib
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
+def _bm25_postings(docs: DataFrame) -> DataFrame:
+    """(term, doc_id, tf, dl) postings of every token of ``docs``."""
+    toks = docs.select("doc_id", F.explode(X.tokens()).alias("term"))
+    lens = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    return tf.join(lens, "doc_id").select("term", "doc_id", "tf", "dl")
 
-    src = _os.path.join(sf_dir, "documents.parquet")
-    key = hashlib.md5(
-        f"{_os.path.abspath(src)}:{_os.path.getmtime(src)}".encode()
-    ).hexdigest()[:12]
-    idx = _os.path.join(_tempfile.gettempdir(), f"bspark_bm25_idx_{key}")
-    if not _os.path.exists(_os.path.join(idx, "postings", "_SUCCESS")):
-        docs = table(spark, sf_dir, "documents")
-        toks = docs.select("doc_id", F.explode(X.tokens()).alias("term"))
-        lens = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-        tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-        # pid-suffixed build dir: two concurrent builders of the same
-        # corpus each write their own temp tree (a SHARED temp dir could
-        # interleave rmtree/write/rename and leave the served index with
-        # part files from two builds — silently duplicated postings)
-        tmp = f"{idx}.building.{_os.getpid()}"
-        _shutil.rmtree(tmp, ignore_errors=True)
+
+def _bm25_stats(postings: DataFrame) -> DataFrame:
+    """The exact integer stats row (n_docs, sum_dl) of ``postings``."""
+    return postings.select("doc_id", "dl").distinct().agg(
+        F.count("*").cast("bigint").alias("n_docs"),
+        F.sum("dl").cast("bigint").alias("sum_dl"),
+    )
+
+
+def _bm25_index(
+    spark: SparkSession, sf_dir: str, name: str, where: str = "true"
+) -> tuple[DataFrame, DataFrame]:
+    """(postings, stats) of the persisted index over the documents
+    matching the SQL filter ``where``, cached as artifact ``name``."""
+    import os
+
+    def build(out: str) -> None:
         # checkpoint BEFORE repartitionByRange: the range partitioner
         # SAMPLES its input first, so an un-materialized join pipeline
         # would tokenize the corpus twice (the r5 token-budget lesson —
         # measured 253 s -> ~60 s for this build at sf10)
-        flat = (
-            tf.join(lens, "doc_id")
-            .select("term", "doc_id", "tf", "dl")
-            .localCheckpoint()
-        )
+        flat = _bm25_postings(
+            table(spark, sf_dir, "documents").filter(where)
+        ).localCheckpoint()
         (
             flat.repartitionByRange(32, "term")
             .sortWithinPartitions("term", "doc_id")
             .write.mode("overwrite")
-            .parquet(_os.path.join(tmp, "postings"))
+            .parquet(os.path.join(out, "postings"))
         )
-        lens.agg(
-            F.count("*").cast("double").alias("n_docs"), F.avg("dl").alias("avgdl")
-        ).write.mode("overwrite").parquet(_os.path.join(tmp, "stats"))
-        # atomic publish: a concurrent builder that lost the race keeps
-        # the already-served index and discards its own build
-        atomic_publish(
-            tmp,
-            idx,
-            success_rel=[
-                _os.path.join("postings", "_SUCCESS"),
-                _os.path.join("stats", "_SUCCESS"),
-            ],
+        _bm25_stats(flat).write.mode("overwrite").parquet(
+            os.path.join(out, "stats")
         )
+
+    src = os.path.join(sf_dir, "documents.parquet")
+    idx = derived(name, [src], build, where)
     return (
-        read_parquet(spark, _os.path.join(idx, "postings")),
-        read_parquet(spark, _os.path.join(idx, "stats")),
+        read_parquet(spark, os.path.join(idx, "postings")),
+        read_parquet(spark, os.path.join(idx, "stats")),
     )
 
 
-def _bm25_scored_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _bm25_scored_from_index(postings: DataFrame, stats: DataFrame) -> DataFrame:
     """Probe-side twin of _bm25_scored: same (doc_id, score, n_terms)
     contract and the same IEEE expression tree, candidates coming from a
-    term-pruned index scan instead of a corpus pass."""
-    postings, stats = _bm25_index(spark, sf_dir)
+    term-pruned postings scan instead of a corpus pass. ``stats`` rows
+    (n_docs, sum_dl) are summed, so the stats of several indexes merge
+    exactly; avgdl = sum_dl / n_docs."""
     post = postings.filter(F.col("term").isin(*_BM25_TERMS))
+    corpus = stats.agg(
+        F.sum("n_docs").cast("double").alias("n_docs"),
+        (F.sum("sum_dl").cast("double") / F.sum("n_docs").cast("double")).alias(
+            "avgdl"
+        ),
+    )
     dft = post.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-    scored = post.join(F.broadcast(dft), "term").crossJoin(F.broadcast(stats))
+    scored = post.join(F.broadcast(dft), "term").crossJoin(F.broadcast(corpus))
     idf = F.log(
         F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )
@@ -2499,15 +2507,8 @@ from brooklin_spark import registry as _registry  # noqa: E402
 
 @query("text_bm25_search_persisted", oracle=_registry.ORACLES["text_bm25_search"])
 def text_bm25_search_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    scored = _bm25_scored_from_index(spark, sf_dir)
-    top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
-    rw = W.orderBy(F.desc("score"), F.asc("doc_id"))
-    return top.select(
-        "doc_id",
-        F.round("score", 8).alias("score"),
-        F.col("n_terms").cast("bigint").alias("n_terms"),
-        F.row_number().over(rw).cast("bigint").alias("rank"),
-    )
+    index = _bm25_index(spark, sf_dir, "bm25_idx")
+    return _bm25_top20(_bm25_scored_from_index(*index))
 
 
 @query(
@@ -2523,7 +2524,7 @@ def text_hybrid_rrf_search_persisted(spark: SparkSession, sf_dir: str) -> DataFr
 
     def sparse_leg():
         btop = (
-            _bm25_scored_from_index(spark, sf_dir)
+            _bm25_scored_from_index(*_bm25_index(spark, sf_dir, "bm25_idx"))
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(_RRF_L)
         )
@@ -2746,71 +2747,20 @@ def quality_wilson_source_ranking(spark: SparkSession, sf_dir: str) -> DataFrame
 # retrieval runs daily: the PERSISTED base index (80% of the corpus,
 # doc_id % 5 != 0) is read as-is, only the 20% delta batch tokenizes, and
 # the probe unions base postings with delta postings under EXACTLY merged
-# stats (bigint n_docs/sum_dl add exactly; one division reproduces the
-# full-corpus AVG(dl) bit-for-bit). Work per refresh is O(delta), never
-# O(corpus); the answer provably equals a from-scratch build — the oracle
-# IS the full-corpus BM25. Same build-once/atomic-publish discipline as
-# _bm25_index, cached under its own key.
+# stats (see the persisted-index comment). Work per refresh is O(delta),
+# never O(corpus); the answer provably equals a from-scratch build — the
+# oracle IS the full-corpus BM25. The base is _bm25_index over the base
+# filter, cached under its own artifact name.
 # ---------------------------------------------------------------------------
 
 _BMIR_MOD = 5  # delta = doc_id % 5 == 0 (~20% of the corpus)
 
 
-def _bm25_base_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    import hashlib
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    src = _os.path.join(sf_dir, "documents.parquet")
-    key = hashlib.md5(
-        f"{_os.path.abspath(src)}:{_os.path.getmtime(src)}:base{_BMIR_MOD}".encode()
-    ).hexdigest()[:12]
-    idx = _os.path.join(_tempfile.gettempdir(), f"bspark_bm25_base_{key}")
-    if not _os.path.exists(_os.path.join(idx, "postings", "_SUCCESS")):
-        docs = table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % _BMIR_MOD != 0
-        )
-        toks = docs.select("doc_id", F.explode(X.tokens()).alias("term"))
-        lens = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-        tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-        tmp = f"{idx}.building.{_os.getpid()}"
-        _shutil.rmtree(tmp, ignore_errors=True)
-        flat = (
-            tf.join(lens, "doc_id")
-            .select("term", "doc_id", "tf", "dl")
-            .localCheckpoint()
-        )
-        (
-            flat.repartitionByRange(32, "term")
-            .sortWithinPartitions("term", "doc_id")
-            .write.mode("overwrite")
-            .parquet(_os.path.join(tmp, "postings"))
-        )
-        # EXACT integer stats (not a pre-divided avg): increments must add
-        # without float error, so the merged avgdl is one division over
-        # exact sums — bit-identical to a full-corpus AVG(dl)
-        lens.agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum("dl").cast("bigint").alias("sum_dl"),
-        ).write.mode("overwrite").parquet(_os.path.join(tmp, "stats"))
-        atomic_publish(
-            tmp,
-            idx,
-            success_rel=[
-                _os.path.join("postings", "_SUCCESS"),
-                _os.path.join("stats", "_SUCCESS"),
-            ],
-        )
-    return (
-        read_parquet(spark, _os.path.join(idx, "postings")),
-        read_parquet(spark, _os.path.join(idx, "stats")),
-    )
-
-
 @query("text_bm25_index_refresh", oracle=_registry.ORACLES["text_bm25_search"])
 def text_bm25_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base_post, base_stats = _bm25_base_index(spark, sf_dir)
+    base_post, base_stats = _bm25_index(
+        spark, sf_dir, "bm25_base", f"doc_id % {_BMIR_MOD} != 0"
+    )
 
     # O(delta): only the new batch tokenizes on a refresh
     delta = table(spark, sf_dir, "documents").filter(
@@ -2823,42 +2773,13 @@ def text_bm25_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count("*").alias("tf"))
     delta_post = tf.join(lens, "doc_id").select("term", "doc_id", "tf", "dl")
     delta_stats = lens.agg(
-        F.count("*").cast("bigint").alias("d_n"),
-        F.sum("dl").cast("bigint").alias("d_sum"),
+        F.count("*").cast("bigint").alias("n_docs"),
+        F.sum("dl").cast("bigint").alias("sum_dl"),
     )
-    stats = (
-        base_stats.crossJoin(F.broadcast(delta_stats))
-        .select(
-            (F.col("n_docs") + F.col("d_n")).cast("double").alias("n_docs"),
-            (
-                (F.col("sum_dl") + F.col("d_sum")).cast("double")
-                / (F.col("n_docs") + F.col("d_n")).cast("double")
-            ).alias("avgdl"),
-        )
+    scored = _bm25_scored_from_index(
+        base_post.unionByName(delta_post), base_stats.unionByName(delta_stats)
     )
-    post = base_post.filter(F.col("term").isin(*_BM25_TERMS)).unionByName(
-        delta_post
-    )
-    dft = post.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-    scored = post.join(F.broadcast(dft), "term").crossJoin(F.broadcast(stats))
-    idf = F.log(
-        F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    denom = F.col("tf") + _BM25_K1 * (
-        1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl")
-    )
-    scored = scored.groupBy("doc_id").agg(
-        F.sum(idf * F.col("tf") * (_BM25_K1 + 1) / denom).alias("score"),
-        F.count("*").alias("n_terms"),
-    )
-    top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
-    rw = W.orderBy(F.desc("score"), F.asc("doc_id"))
-    return top.select(
-        "doc_id",
-        F.round("score", 8).alias("score"),
-        F.col("n_terms").cast("bigint").alias("n_terms"),
-        F.row_number().over(rw).cast("bigint").alias("rank"),
-    )
+    return _bm25_top20(scored)
 
 
 # ---------------------------------------------------------------------------

@@ -25,8 +25,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
-
 
 @dataclass
 class ChunkedQuerySpec:
@@ -91,24 +89,3 @@ def shard_predicates(spec: ChunkedQuerySpec) -> list[str]:
     url, table, predicates=...): N parallel disjoint partition reads with
     the hash evaluated DB-side (no data skew if the hash is uniform)."""
     return [shard_predicate(spec, [s]) for s in range(spec.num_shards)]
-
-
-def read_sharded_jdbc(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    spec: ChunkedQuerySpec,
-    properties: dict[str, str] | None = None,
-) -> DataFrame:
-    """Parallel snapshot read: one Spark partition per hash shard.
-
-    Correctness invariant (tested via DuckDB stand-in): the union of all
-    shard reads equals the full table with no duplicates — MOD partitions
-    the key space totally.
-    """
-    return spark.read.jdbc(
-        url=url,
-        table=f"( {spec.query} ) AS nested" if spec.query.strip().upper().startswith("SELECT") else table,
-        predicates=shard_predicates(spec),
-        properties=properties or {},
-    )

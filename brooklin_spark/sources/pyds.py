@@ -655,8 +655,3 @@ def register(spark) -> None:
     spark.dataSource.register(ParquetReplayDataSource)
     spark.dataSource.register(TransactionalDirDataSource)
     spark.dataSource.register(AvroOcfDataSource)
-
-
-def offsets_json(start_row: int) -> str:
-    """Kafka-parity helper: serialized start position for diagnostics."""
-    return json.dumps({"rows": start_row})

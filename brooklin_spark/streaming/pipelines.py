@@ -10,6 +10,7 @@ deterministically (one file = one micro-batch).
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 import uuid
 
@@ -104,6 +105,7 @@ def run_to_completion(
         q.processAllAvailable()
     finally:
         q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
     if last_per_key:
         seen: dict[tuple, object] = {}
         for row in collected:  # later emits win

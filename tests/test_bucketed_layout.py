@@ -253,7 +253,7 @@ def test_q5_spine_twin_autoroute(spark, sf_smoke):
 
         spec_path = os.path.join(locs[0], SPEC_FILE)
         spec = json.load(open(spec_path))
-        spec["source"]["mtime"] = 0.0
+        spec["source"]["stamp"][1] = 0  # file_stamp: (ino, mtime_ns, size)
         json.dump(spec, open(spec_path, "w"))
         assert spine_twin(spark, sf_smoke) is None
     finally:

@@ -23,8 +23,11 @@ ROOT = Path(__file__).resolve().parent.parent
 
 #: modules whose top-level defs must all be reachable
 MODULES = [
+    "brooklin_spark/checkpoint.py",
+    "brooklin_spark/io.py",
     "brooklin_spark/operators/dedup.py",
     "brooklin_spark/queries/_sqlgen.py",
+    "brooklin_spark/sources/pyds.py",
 ]
 
 #: where a reference counts: everything that runs outside the tests
